@@ -13,6 +13,7 @@ import os
 import sys
 from collections.abc import Callable
 from datetime import datetime
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -32,7 +33,7 @@ from hyperdx_spark.model import (
     SqlAstFilter,
     SqlFilter,
 )
-from hyperdx_spark.session import tune_session
+from hyperdx_spark.session import overlapped, tune_session
 from hyperdx_spark import metrics
 from hyperdx_spark.pipeline import dedup, multimodal, similarity, text
 from hyperdx_spark.post import compute_ratio, format_time_chart, previous_period
@@ -2356,15 +2357,6 @@ SELECT query_id, match_id, round(cos, 4) AS cos, rank FROM ranked WHERE rank <= 
 """
 
 
-def q_ann_lsh(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    return _round4(
-        similarity.cosine_topk_lsh(
-            emb, emb.where(F.col("vec_id") < 3), k=5, num_planes=16, bands=8
-        )
-    )
-
-
 def q_embedding_dedup(spark, sf_dir):
     """r14: `exhaustive=True` — the gate's provably-recall-1 config (the
     pairs analogue of nprobe=nlist / refine>=corpus), after sf0.1 showed
@@ -2466,37 +2458,6 @@ SELECT doc_id AS media_id,
 FROM d
 """
 
-
-# --------------------------------------------------------------------------
-# §2.6 Lucene dispatch composite: ranges, JSON-field comparison, wildcard,
-# quoted exact equality, negation — one query through every term kind
-# --------------------------------------------------------------------------
-
-def q_lucene_dispatch(spark, sf_dir):
-    cfg = ChartConfig(
-        source=_src(),
-        select="event_id, ts, event_type, value",
-        where=(
-            'value:[10 TO 90] AND props.k:>=20 AND '
-            '(event_type:err* OR event_type:"purchase") AND NOT event_type:click'
-        ),
-        where_language="lucene",
-        order_by="ts ASC, event_id ASC",
-        limit=300,
-        date_range=RANGE,
-    )
-    return compile_chart_config(spark, cfg, sf_dir=sf_dir)
-
-
-O_LUCENE_DISPATCH = f"""
-SELECT event_id, ts, event_type, value FROM events
-WHERE {TIME_WHERE}
-  AND value >= 10 AND value <= 90
-  AND try_cast(coalesce(json_extract_string(props, '$.k'), '') AS DOUBLE) >= 20
-  AND (lower(event_type) LIKE 'err%' OR event_type = 'purchase')
-  AND NOT (lower(event_type) LIKE '%click%')
-ORDER BY ts, event_id LIMIT 300
-"""
 
 # --------------------------------------------------------------------------
 # §2.2 filters array: structured sql_ast comparisons + raw SQL filter
@@ -4156,21 +4117,11 @@ def q_ann_indexed(spark, sf_dir):
     replay + raising rotation-invariance self-check on the projection)."""
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 3)
-    from concurrent.futures import ThreadPoolExecutor
     from hyperdx_spark.pipeline import clustering as _clu
     import tempfile
 
-    # r17 (guide §2.6, same device as q_dedup_all): this entry's
-    # construction is a sequence of INDEPENDENT eager chains — the IVFPQ
-    # index build+query, the fixed-point k-means fit feeding d4_select,
-    # the PQ/IVF codebook trainings, the k-means|| trace, and the PCA
-    # fit + raising rotation-invariance self-check — each a string of
-    # small driver-blocking jobs (cProfile: 19.2 s of 20.7 s construction
-    # was py4j socket wait across 32 sequential collects). Submitting the
-    # chains from a thread pool overlaps their cluster work; every chain
-    # is internally unchanged and deterministic (md5 seeds, exact-integer
-    # arithmetic), no temp views are shared, and exceptions surface at
-    # .result() exactly as they did inline.
+    # The eager chains below are independent strings of small collects
+    # (19.2 s of 20.7 s construction was py4j wait): overlap them.
 
     def _ivfpq_chain():
         # composed IVF-PQ persisted index (FAISS IVFPQ shape): build to a
@@ -4237,31 +4188,19 @@ def q_ann_indexed(spark, sf_dir):
     # ivf nprobe=nlist, pq/ivfpq refine=1e8 (a rank-filter bound, so any
     # value >= |corpus| is free and sf-robust where the old 4096 broke
     # beyond ~4k vectors)
-    with ThreadPoolExecutor(max_workers=4) as _pool:
-        _fut_ivfpq = _pool.submit(_ivfpq_chain)
-        _fut_km = _pool.submit(_km_chain)
-        _fut_pca = _pool.submit(_pca_chain)
-        _fut_kmp = _pool.submit(
-            _clu.kmeans_parallel_trace, emb, 2, oversample=4, rounds=2
-        )
-        _fut_pq = _pool.submit(
-            similarity.cosine_topk_pq,
-            emb, qs, k=5, m=8, codes=16, refine=100_000_000,
-        )
-        _fut_ivf = _pool.submit(
-            similarity.cosine_topk_ivf, emb, qs, k=5, nlist=8, nprobe=8
-        )
-        # lazy builders ride this thread while the eager chains run
-        brute = similarity.cosine_topk(emb, qs, k=5)
-        lsh = similarity.cosine_topk_lsh(
-            emb, qs, k=5, num_planes=16, bands=8, exhaustive=True
-        )
-        ivfpq = _fut_ivfpq.result()
-        km_c, d4s = _fut_km.result()
-        kmp_rows = _fut_kmp.result()
-        pq = _fut_pq.result()
-        ivf = _fut_ivf.result()
-        _fut_pca.result()  # raising self-check; no frame rides the gate
+    chains = overlapped([
+        _ivfpq_chain, _km_chain, _pca_chain,
+        partial(_clu.kmeans_parallel_trace, emb, 2, oversample=4, rounds=2),
+        partial(similarity.cosine_topk_pq, emb, qs, k=5, m=8, codes=16, refine=100_000_000),
+        partial(similarity.cosine_topk_ivf, emb, qs, k=5, nlist=8, nprobe=8),
+    ])
+    # lazy builders ride this thread while the eager chains run
+    brute = similarity.cosine_topk(emb, qs, k=5)
+    lsh = similarity.cosine_topk_lsh(
+        emb, qs, k=5, num_planes=16, bands=8, exhaustive=True
+    )
+    # _pca_chain is a raising self-check; no frame rides the gate
+    ivfpq, (km_c, d4s), _, kmp_rows, pq, ivf = chains
     out = (
         brute.select(F.lit("brute").alias("part"), "*")
         .unionByName(lsh.select(F.lit("lsh").alias("part"), "*"))
@@ -4411,19 +4350,15 @@ def q_csv_render(spark, sf_dir):
         convert_to_table_chart_config,
     )
 
-    # r17 (guide §2.6): the three eager sub-parts — the CSV round-trip,
-    # the render-cap collect, and the external-API series run further
-    # down — are independent; overlap them. Each call is unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
     from hyperdx_spark.externalapi import run_chart_series
 
     ext_src = _src()
-    _pool = ThreadPoolExecutor(max_workers=3)
-    try:
-        _fut_csv = _pool.submit(q_csv_export, spark, sf_dir)
-        _fut_cap = _pool.submit(q_render_cap, spark, sf_dir)
-        _fut_ext = _pool.submit(
+    # The CSV round-trip, the render-cap collect and the external-API
+    # series (gated further down) are independent eager parts: overlap them.
+    csv, cap, recs = overlapped([
+        partial(q_csv_export, spark, sf_dir),
+        partial(q_render_cap, spark, sf_dir),
+        partial(
             run_chart_series,
             spark,
             [
@@ -4439,17 +4374,14 @@ def q_csv_render(spark, sf_dir):
             start_time_ms=1704067200000,   # 2024-01-01 UTC (== RANGE)
             end_time_ms=1706745600000,     # 2024-02-01 UTC
             granularity="1d",
-        )
-        csv = _fut_csv.result().select(
-            F.lit("csv").alias("part"), F.col("day_s").alias("ts_s"),
-            F.col("event_type").alias("series"),
-            F.col("cnt").cast("double").alias("value"),
-        )
-        cap = _fut_cap.result().select(
-            F.lit("render").alias("part"), "ts_s", "series", "value"
-        )
-    finally:
-        _pool.shutdown(wait=True)
+        ),
+    ])
+    csv = csv.select(
+        F.lit("csv").alias("part"), F.col("day_s").alias("ts_s"),
+        F.col("event_type").alias("series"),
+        F.col("cnt").cast("double").alias("value"),
+    )
+    cap = cap.select(F.lit("render").alias("part"), "ts_s", "series", "value")
     # one granular tile config, rendered through each display-shape rewrite
     tile = ChartConfig(
         source=_src(),
@@ -4494,8 +4426,6 @@ def q_csv_render(spark, sf_dir):
     # external_series_to_chart_config -> compile -> format_ch_result; the
     # zipped records unpivot one row per (record, series) so the oracle
     # hashes the epoch-ms bucket, group, and each series_<i>.data value.
-    # (submitted to the pool above; the pool has already drained)
-    recs = _fut_ext.result()
     ext_rows = []
     for r in recs:
         grp = "|".join(str(g) for g in r["group"])
@@ -4602,18 +4532,8 @@ def q_dedup_all(spark, sf_dir):
         F.octet_length("text_dedup").cast("long").alias("v1"),
         F.col("n_dropped").cast("long").alias("v2"),
     )
-    # r17 (guide §2.6): the two eager connected-components chains — the
-    # ngram-jaccard CC behind the groups part and the cosine-pair CC
-    # behind semkeep/semdedup — are independent and each ends in a driver
-    # collect, so built sequentially their cluster work serializes
-    # (~2.0 s + ~1.4 s measured). Submit both from a thread pool so the
-    # jobs overlap on the scheduler; the frames produced are IDENTICAL
-    # (no shared temp views, and local-CC label propagation is
-    # order-insensitive over the collected edge SET), only the wall
-    # changes. Exceptions surface at .result() exactly as they did
-    # inline.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # The jaccard CC behind the groups part and the cosine-pair CC behind
+    # semkeep each end in a driver collect (~2.0 s + ~1.4 s): overlap them.
     def _semkeep_chain():
         emb_t = load_table(spark, sf_dir, "embeddings")
         scored_t = (
@@ -4627,15 +4547,12 @@ def q_dedup_all(spark, sf_dir):
             id_col="doc_id", score_col="score",
         )
 
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fut_groups = _pool.submit(q_dedup_groups, spark, sf_dir)
-        _fut_semkeep = _pool.submit(_semkeep_chain)
-        groups = _fut_groups.result().select(
-            F.lit("groups").alias("part"), F.col("id").cast("string").alias("k"),
-            F.col("group_id").cast("long").alias("v1"),
-            F.col("is_keeper").cast("long").alias("v2"),
-        )
-        sem_keep_df = _fut_semkeep.result()
+    groups, sem_keep_df = overlapped([partial(q_dedup_groups, spark, sf_dir), _semkeep_chain])
+    groups = groups.select(
+        F.lit("groups").alias("part"), F.col("id").cast("string").alias("k"),
+        F.col("group_id").cast("long").alias("v1"),
+        F.col("is_keeper").cast("long").alias("v2"),
+    )
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", text.token_count("text").alias("__nt")
     )
@@ -5133,41 +5050,25 @@ def q_trace_waterfall(spark, sf_dir):
     rng = (datetime(2024, 1, 1), datetime(2024, 7, 1))
     rows = []
 
-    # r17 (guide §2.6): the five post-write reads — the waterfall DFS,
-    # the three trace pickers, and the breakdown — are independent eager
-    # jobs over the just-written spans table; run them from a thread
-    # pool instead of serially. Each call is unchanged; `rows` is
-    # assembled in the original order after the gather.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        _fut_wf = _pool.submit(
-            traces.trace_waterfall, spark, src, tmp,
-            trace_id="7", max_spans=2000,
-        )
-        _fut_pick = {
-            mode: _pool.submit(
-                traces.pick_trace, spark, src, tmp,
-                date_range=rng, pick_by=mode,
-            )
-            for mode in ("slowest", "first_error", "most_recent")
-        }
-        _fut_bd = _pool.submit(
-            lambda: traces.trace_breakdown(
-                spark, src, tmp, parent_filter_sql="name = 'op1'",
-                date_range=rng, min_parent_duration_ms=50, top_n=10,
-            ).collect()
-        )
-        wf = _fut_wf.result()
-        picks = {m: f.result() for m, f in _fut_pick.items()}
-        bd = _fut_bd.result()
+    # The five reads of the just-written spans table are independent
+    # eager jobs: overlap them.
+    modes = ("slowest", "first_error", "most_recent")
+    wf, *picks, bd = overlapped(
+        [partial(traces.trace_waterfall, spark, src, tmp, trace_id="7", max_spans=2000)]
+        + [partial(traces.pick_trace, spark, src, tmp, date_range=rng, pick_by=m)
+           for m in modes]
+        + [lambda: traces.trace_breakdown(
+            spark, src, tmp, parent_filter_sql="name = 'op1'",
+            date_range=rng, min_parent_duration_ms=50, top_n=10,
+        ).collect()]
+    )
     rows += [
         ("wf", i, f"{s['spanId']}|{s['parentSpanId']}|{s['depth']}",
          s["durationMs"])
         for i, s in enumerate(wf["spans"])
     ]
-    for mode in ("slowest", "first_error", "most_recent"):
-        rows.append((f"pick|{mode}", 0, picks[mode], 0.0))
+    for mode, pick in zip(modes, picks):
+        rows.append((f"pick|{mode}", 0, pick, 0.0))
     for r in bd:
         key = f"{r['service']}|{r['operation']}"
         rows += [
@@ -6225,16 +6126,10 @@ def q_mcp_tools(spark, sf_dir):
     (already (part,k,s,v)-shaped) + emerging & disappeared signals
     (q_emerging_signals — which had never been driver-verified) reshaped
     into the same narrow schema, one row per (signal, metric)."""
-    # r17 (guide §2.6): both sub-entries are construction-eager (the
-    # waterfall/picker/breakdown collects; the Drain mining sample) and
-    # fully independent — overlap them.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fut_tw = _pool.submit(q_trace_waterfall, spark, sf_dir)
-        _fut_es = _pool.submit(q_emerging_signals, spark, sf_dir)
-        tw = _fut_tw.result()
-        es = _fut_es.result()
+    # Both sub-entries are independent and eager at construction: overlap them.
+    tw, es = overlapped([
+        partial(q_trace_waterfall, spark, sf_dir), partial(q_emerging_signals, spark, sf_dir)
+    ])
     key = F.concat_ws("|", F.col("pattern"), F.col("status"))
     sig_parts = [
         es.select(
@@ -6277,17 +6172,12 @@ def q_ann_multimodal(spark, sf_dir):
     that silently dropped out of the driver window in r13 — in one entry.
     The multimodal metric columns unpivot onto the ANN schema (one
     'mm|<metric>' part per column, kind carried in a new string slot)."""
-    # r17 (guide §2.6): the ANN construction (its own pool of eager
-    # chains) and the multimodal decode's raising self-check are
-    # independent eager work — overlap them. Frames are identical to the
-    # sequential build; exceptions propagate at .result().
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fut_ann = _pool.submit(q_ann_indexed, spark, sf_dir)
-        _fut_mm = _pool.submit(q_multimodal_features, spark, sf_dir)
-        ann = _fut_ann.result().withColumn("s", F.lit(""))
-        mm = _fut_mm.result()
+    # The ANN construction and the decode's raising self-check are
+    # independent eager work: overlap them.
+    ann, mm = overlapped([
+        partial(q_ann_indexed, spark, sf_dir), partial(q_multimodal_features, spark, sf_dir)
+    ])
+    ann = ann.withColumn("s", F.lit(""))
     sch = {f.name: f.dataType for f in ann.schema.fields}
     # r17 (guide §2.3/§1.2): the old per-metric unionByName loop planted
     # SEVEN copies of the decode subtree (scan → render → mapInPandas

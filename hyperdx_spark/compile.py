@@ -438,14 +438,28 @@ def compile_chart_config(
     df: Optional[DataFrame] = None,
     settings: Optional[QuerySettings] = None,
 ) -> DataFrame:
-    """Compile *config* to a lazy DataFrame (renderChartConfig.ts:2247-2332)."""
-    settings = settings or DEFAULT_SETTINGS
+    """Compile *config* to a lazy DataFrame (renderChartConfig.ts:2247-2332).
+
+    A pure function of (config, tables): nothing is registered on the
+    session, so concurrent compiles cannot interfere."""
+    return _compile(spark, config, sf_dir, df, settings or DEFAULT_SETTINGS, {})
+
+
+def _compile(
+    spark: SparkSession, config: ChartConfig, sf_dir: Optional[str],
+    df: Optional[DataFrame], settings: QuerySettings, ctes: dict[str, DataFrame],
+) -> DataFrame:
     source = config.source
-    # CTEs (renderWith): compile each sub-config and register it as a temp
-    # view — the view holds the lazy logical plan, so the whole query stays
-    # one Catalyst plan (no materialization between CTE and outer query)
-    for name, sub_cfg in config.ctes:
-        compile_chart_config(spark, sub_cfg, sf_dir=sf_dir, settings=settings).createOrReplaceTempView(name)
+    # CTEs (renderWith): each sub-config compiles to a lazy frame in a
+    # compile-local map that later CTEs and the outer query resolve first,
+    # so the whole query stays one Catalyst plan (no materialization
+    # between CTE and outer query)
+    if config.ctes:
+        ctes = dict(ctes)
+        for name, sub_cfg in config.ctes:
+            ctes[name] = _compile(spark, sub_cfg, sf_dir, None, settings, ctes).alias(name)
+    if df is None:
+        df = ctes.get(source.table)
     if df is None:
         import os as _os
 
@@ -453,7 +467,7 @@ def compile_chart_config(
             _os.path.join(sf_dir, f"{source.table}.parquet")
         )
         if not in_sf_dir:
-            # a CTE or an externally-registered view
+            # an externally-registered view
             df = spark.table(source.table)
         else:
             from hyperdx_spark.io import load_table

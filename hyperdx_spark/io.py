@@ -14,6 +14,7 @@ conversion is a cheap projection that stays inside whole-stage codegen.
 from __future__ import annotations
 
 import os
+import stat
 from datetime import datetime, timedelta, timezone
 from functools import lru_cache
 
@@ -89,6 +90,13 @@ def _read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def _tree_mtime_ns(path: str) -> int:
+    """Newest mtime over *path* and every directory below it. A streaming
+    sink commit writes into ``_spark_metadata/`` and a partition append into
+    ``date=…/``; neither changes the stat of *path* itself."""
+    return max(os.stat(d).st_mtime_ns for d, _, _ in os.walk(path))
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -113,7 +121,8 @@ def load_table(
     same discipline as the schema cache above, and like it this never
     caches *data*; every execution still scans the parquet. The memo lives
     on the session object (dies with it); the mtime/size key evicts on any
-    file change, and conf-dependent plan pieces are fixed per session by
+    file change — for a directory table, on any change to a directory below
+    it too — and conf-dependent plan pieces are fixed per session by
     ``tune_session``.
 
     ASSUMPTION (r16 ADVICE #5): the memoized plan and the
@@ -134,6 +143,7 @@ def load_table(
         cache_key = (
             os.path.realpath(path), st.st_mtime_ns, st.st_size,
             time_filter, end_inclusive,
+            _tree_mtime_ns(path) if stat.S_ISDIR(st.st_mode) else None,
         )
         cache = getattr(spark, "_hdx_table_plan_cache", None)
         if cache is None:

@@ -17,7 +17,10 @@ local[32]):
 from __future__ import annotations
 
 import os
+import uuid
+from itertools import islice
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs every entry point re-asserts, so the engine
@@ -104,3 +107,62 @@ def get_spark(app_name: str = "hyperdx_spark", cpus: int | None = None) -> Spark
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return tune_session(spark)
+
+
+def overlapped(thunks, ahead=None):
+    """Run zero-argument *thunks* concurrently and iterate their results in
+    declared order, so ``a, b = overlapped([f, g])`` works.
+
+    All thunks are submitted at the call — or the first *ahead*, then one
+    more per result taken — to a thread pool owned by the call, so nested
+    calls never wait on each other's workers. Each runs through
+    ``inheritable_thread_target`` (keeping the caller's job group and tags)
+    under a job tag unique to the call; tags stack, so cancelling an outer
+    call cancels the calls nested in it. On the first exception of any
+    thunk, or when the consumer closes the iterator early, the call cancels
+    its tag's jobs and waits for its threads before it raises or returns:
+    no work outlives the call. Thunks must not share mutable session state
+    such as temp view names.
+    """
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+
+    session = SparkSession.active()
+    sc = session.sparkContext
+    tag = f"hdx-overlap-{uuid.uuid4().hex}"
+    if ahead is None:
+        thunks = list(thunks)
+        ahead = max(1, len(thunks))
+    thunks = iter(thunks)
+    pool = ThreadPoolExecutor(max_workers=ahead)
+
+    def submit(fn):
+        def run():
+            sc.addJobTag(tag)
+            return fn()
+
+        return pool.submit(inheritable_thread_target(session)(run))
+
+    def results():
+        pending = []
+        try:
+            for fn in islice(thunks, ahead):
+                pending.append(submit(fn))
+            yield  # primed below, so close() and GC reach the cleanup
+            while pending:
+                for f in pending:
+                    if f.done() and f.exception() is not None:
+                        f.result()
+                if not pending[0].done():
+                    wait([f for f in pending if not f.done()], return_when=FIRST_COMPLETED)
+                    continue
+                pending += [submit(fn) for fn in islice(thunks, 1)]
+                yield pending.pop(0).result()
+        finally:
+            while not all(f.done() for f in pending):
+                sc.cancelJobsWithTag(tag)
+                wait(pending, timeout=0.2)
+            pool.shutdown(wait=True)
+
+    it = results()
+    next(it)
+    return it

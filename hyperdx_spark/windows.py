@@ -24,9 +24,10 @@ seconds regardless of total range.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from contextlib import closing
 from dataclasses import dataclass, replace
 from datetime import datetime, timedelta
+from functools import partial
 from typing import Iterator, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,10 +35,11 @@ from pyspark.sql import functions as F
 
 from hyperdx_spark.granularity import auto_granularity, granularity_seconds
 from hyperdx_spark.model import ChartConfig
+from hyperdx_spark.session import overlapped
 
 ONE_MIN_WINDOW = 60
 # How many windows ahead offset_paginated_search keeps in flight (compile +
-# first-page job). Driver-side pipelining only — never affects results.
+# first-page job): the only bound on its prefetch.
 _WINDOW_PREFETCH = 3
 
 DEFAULT_TIME_WINDOWS_SECONDS = (
@@ -380,7 +382,12 @@ def offset_paginated_search(
     would make per-window pages globally mis-ordered, so those queries run
     as ONE whole-range window. An unset ``order_by`` defaults to timestamp
     ordering in *direction* (DESC unless specified); an explicit ordering
-    drives the window direction (``isFirstOrderByAscending``)."""
+    drives the window direction (``isFirstOrderByAscending``).
+
+    The compile and first page of up to ``_WINDOW_PREFETCH`` windows ahead
+    are read before the consumer reaches them, so on a source that is being
+    appended to those first pages are earlier snapshots than a serial drain
+    would read. Closing the iterator cancels their Spark jobs."""
     from hyperdx_spark.compile import compile_chart_config
 
     assert cfg.date_range is not None, "offset pagination requires a date range"
@@ -426,29 +433,13 @@ def offset_paginated_search(
         base_df = compile_chart_config(spark, sub, sf_dir=sf_dir)
         return base_df, base_df.limit(page_size).collect()
 
-    # r17 (guide §2.6): the window ladder is fully enumerable up front and a
-    # full drain always fetches every window's first page, so the compile +
-    # page-0 job of the next few windows is prefetched from a small thread
-    # pool while the current window's pages are consumed — the drain is no
-    # longer serialized on one (compile, tiny job) round per window. Pages
-    # still execute as their own LIMIT/OFFSET jobs (the reference's per-page
-    # round-trip shape), pages within a window stay strictly sequential
-    # (page n+1 is only issued after page n proved full), and yield order is
-    # unchanged. The prefetch depth bounds how much read-only work an
-    # abandoned iterator can waste.
-    pool = ThreadPoolExecutor(max_workers=_WINDOW_PREFETCH)
-    futs = {}
-    submitted = 0
-    try:
-        def _top_up(upto):
-            nonlocal submitted
-            while submitted < min(upto, len(windows)):
-                futs[submitted] = pool.submit(_first_page, windows[submitted])
-                submitted += 1
-
-        for i in range(len(windows)):
-            _top_up(i + 1 + _WINDOW_PREFETCH)
-            base_df, rows = futs.pop(i).result()
+    # Compile + page 0 of the next windows overlap the consumer's paging;
+    # pages within a window stay sequential, and yield order is unchanged.
+    firsts = overlapped(
+        (partial(_first_page, w) for w in windows), ahead=_WINDOW_PREFETCH
+    )
+    with closing(firsts):
+        for base_df, rows in firsts:
             if rows:
                 yield rows
             if len(rows) < page_size:
@@ -459,5 +450,3 @@ def offset_paginated_search(
                     yield rows
                 if len(rows) < page_size:
                     break
-    finally:
-        pool.shutdown(wait=False, cancel_futures=True)

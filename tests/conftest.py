@@ -10,9 +10,17 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     from hyperdx_spark.session import get_spark
 
+    # A fresh warehouse per run, so managed tables a killed run left behind
+    # cannot collide with this one. It is a static conf: it must reach the
+    # JVM at launch, before getOrCreate.
+    warehouse = tmp_path_factory.mktemp("warehouse")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.sql.warehouse.dir={warehouse} "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
     spark = get_spark("hyperdx_spark_tests", cpus=min(os.cpu_count() or 4, 8))
     yield spark
     spark.stop()

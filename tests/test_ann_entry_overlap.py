@@ -1,4 +1,4 @@
-"""r17 q_ann_multimodal restructure guards.
+"""q_ann_multimodal restructure guards.
 
 Two independent optimizations changed the entry's composition (never its
 rows — the strict DuckDB oracle re-verified hash-identical at sf0.01 and
@@ -9,9 +9,11 @@ sf0.001):
    the plan instead of seven times. Pin row-set equality of the two
    compositions over the real decode output, and pin the plan property
    (one MapInPandas chain) the rewrite exists for.
-2. The eager ANN construction chains run from a thread pool (guide
-   §2.6). Determinism of each chain is pinned by the existing
-   clustering/similarity suites; the oracle pins the composition.
+2. The eager ANN construction chains run concurrently through
+   ``session.overlapped``, whose contract (declared order, cancellation,
+   nesting) is pinned by tests/test_overlapped.py. Determinism of each
+   chain is pinned by the clustering/similarity suites; the oracle pins
+   the composition.
 """
 
 from pyspark.sql import functions as F

@@ -295,6 +295,55 @@ def test_cte_two_level_agg(spark, sf_dir, events_source):
     assert got == expected and got
 
 
+
+def test_cte_compile_registers_no_view(spark, sf_dir):
+    """CTEs compile into a compile-local map: the session catalog is the
+    same before and after, so concurrent compiles cannot see each other."""
+    import __spark_entry__ as e
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    df = e.q_cte_two_level(spark, sf_dir)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert df.count() > 0
+
+
+def test_same_named_ctes_compile_concurrently(spark, sf_dir, events_source):
+    """Two threads compile a CTE of the same name over different filters;
+    each result must come from its own CTE."""
+    from hyperdx_spark.io import load_table
+    from hyperdx_spark.model import ChartConfig, SelectCol, Source
+    from hyperdx_spark.session import overlapped
+
+    counts = {
+        r["event_type"]: r["count"]
+        for r in load_table(spark, sf_dir, "events").groupBy("event_type").count().collect()
+    }
+
+    def compile_loop(event_type):
+        inner = ChartConfig(
+            source=events_source, select="ts, event_type",
+            where=f"event_type = '{event_type}'", where_language="sql",
+        )
+        outer = ChartConfig(
+            source=Source(table="picked", timestamp_value_expression="ts"),
+            ctes=[("picked", inner)],
+            select=[SelectCol(agg_fn="count", alias="n")],
+            group_by=["event_type"],
+        )
+        return [
+            {r["event_type"]: r["n"] for r in compile_chart_config(
+                spark, outer, sf_dir=sf_dir
+            ).collect()}
+            for _ in range(20)
+        ]
+
+    clicks, errors = overlapped([
+        lambda: compile_loop("click"), lambda: compile_loop("error"),
+    ])
+    assert clicks == [{"click": counts["click"]}] * 20
+    assert errors == [{"error": counts["error"]}] * 20
+
+
 def test_multi_column_timestamp(spark, sf_dir, tmp_path):
     """pickBucketTimestampColumn (core/utils.ts:192-263): a source listing
     "event_date, ts" filters on BOTH columns (date bounds on the Date one

@@ -22,6 +22,7 @@ def exact_store(spark):
         (3, "the quick brown fox"),      # seed-internal dup -> keeper 1
         (4, "unique seed content here"),
     ])
+    spark.sql("DROP TABLE IF EXISTS inc_store")
     inc.build_exact_store(seed, "inc_store", buckets=4)
     yield seed
     spark.sql("DROP TABLE IF EXISTS inc_store")
@@ -103,6 +104,7 @@ def minhash_store(spark):
         (2, "completely different text about spark query planning and "
             "distributed shuffle joins at terabyte scale for analytics"),
     ])
+    spark.sql("DROP TABLE IF EXISTS inc_mh")
     inc.build_minhash_store(seed, "inc_mh", buckets=4)
     yield base
     spark.sql("DROP TABLE IF EXISTS inc_mh")
@@ -347,3 +349,13 @@ def test_compact_minhash_store(spark, minhash_store):
     spark.sql("ALTER TABLE inc_mh RENAME TO inc_mh__old")
     assert inc.recover_exact_store(spark, "inc_mh") == "restored_from_staging"
     assert sorted(map(tuple, spark.table("inc_mh").collect())) == rows
+
+
+def test_warehouse_is_private_to_the_run(spark):
+    """Managed stores live in a per-run warehouse, never the repo's
+    ``spark-warehouse/``, so a killed run cannot poison the next one."""
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    assert not os.path.abspath(wh).startswith(repo + os.sep)

@@ -2,6 +2,7 @@
 (hyperdx_spark.windows) — ladder shapes ported from utils/searchWindows.ts
 and equality of chunked vs unchunked execution."""
 
+import time
 from datetime import datetime, timedelta
 
 from hyperdx_spark.compile import compile_chart_config
@@ -420,11 +421,16 @@ def test_offset_pagination_prefetch_edges(spark, sf_dir):
     # identical first page between capped and full drains
     assert [r["event_id"] for r in capped[0]] == [r["event_id"] for r in full[0]]
     # early abandonment: consume one page, close the generator — the
-    # prefetch pool must shut down without raising
+    # prefetch must shut down without raising and leave no job running
     it = offset_paginated_search(spark, cfg, sf_dir=sf_dir, page_size=50)
     first = next(it)
     assert len(first) > 0
     it.close()
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 5  # the tracker trails the listener bus
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert not tracker.getActiveJobsIds()
 
 
 def test_offset_pagination_prefetch_error_propagates(spark, sf_dir):
