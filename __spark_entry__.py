@@ -33,7 +33,7 @@ from hyperdx_spark.model import (
     SqlAstFilter,
     SqlFilter,
 )
-from hyperdx_spark.session import overlapped, tune_session
+from hyperdx_spark.session import local_frame, overlapped, tune_session
 from hyperdx_spark import metrics
 from hyperdx_spark.pipeline import dedup, multimodal, similarity, text
 from hyperdx_spark.post import compute_ratio, format_time_chart, previous_period
@@ -1239,25 +1239,28 @@ _NTFY_TEMPLATE = (
 )
 
 
-def _notify_rows(spark, bt, cfg):
+def _notify_rows(bt_rows, cfg):
     """Notify flow under the gate (VERDICT r12 #4): for every fired ALERT
-    bucket, run the full ``render_alert_notifications`` pipeline — outer
-    render, directive extraction (default '@'-action + is_match-gated
-    name-prefix action), webhook resolution, per-channel inner render,
-    slack/generic request building — and emit md5 hashes of the pure string
-    outputs as extra backtest rows (state = 'ntfy|<kind>|<hex>') that the
-    DuckDB oracle rebuilds from the same deterministic inputs
-    (template.ts:556-768)."""
+    bucket among the collected backtest rows *bt_rows*, run the full
+    ``render_alert_notifications`` pipeline — outer render, directive
+    extraction (default '@'-action + is_match-gated name-prefix action),
+    webhook resolution, per-channel inner render, slack/generic request
+    building — and return md5 hashes of the pure string outputs as extra
+    backtest row tuples (state = 'ntfy|<kind>|<hex>') that the DuckDB oracle
+    rebuilds from the same deterministic inputs (template.ts:556-768).
+    Takes rows and returns rows, so the caller computes the backtest once.
+    Buckets render from their UTC instants: ``collect()`` returns naive
+    driver-local wall times, which the renderer would read as UTC."""
     import hashlib
-    from datetime import timedelta
+    from datetime import timedelta, timezone
 
     from hyperdx_spark import webhooks
 
-    # bounded collect: one row per fired DAILY bucket
-    fired = bt.where(F.col("state") == "ALERT").collect()
     rows = []
-    for r in fired:
-        start = r["__timestamp"]
+    for r in bt_rows:
+        if r["state"] != "ALERT":
+            continue
+        start = r["__timestamp"].astimezone(timezone.utc)
         end = start + timedelta(days=1)
         title = webhooks.build_title("errors", r["value"])
         rendered, reqs = webhooks.render_alert_notifications(
@@ -1289,7 +1292,7 @@ def _notify_rows(spark, bt, cfg):
             (start, r["value"], True, r["streak"], f"ntfy|{kind}|{hx}")
             for kind, hx in pay
         )
-    return spark.createDataFrame(rows, bt.schema)
+    return rows
 
 
 def q_alert_backtest(spark, sf_dir):
@@ -1307,7 +1310,8 @@ def q_alert_backtest(spark, sf_dir):
     )
     cfg = alerts.AlertConfig(threshold=65, num_consecutive_windows=2)
     bt = alerts.backtest(daily, cfg)
-    return bt.unionByName(_notify_rows(spark, bt, cfg))
+    bt_rows = bt.collect()  # one row per daily bucket
+    return local_frame(spark, bt_rows + _notify_rows(bt_rows, cfg), bt.schema)
 
 
 # shared CTE prefix: daily error counts -> backtest state machine -> fired
@@ -1484,7 +1488,7 @@ def q_stream_notify(spark, sf_dir):
     mx = ev.agg(F.max("ts")).first()[0]
     sentinel = datetime(mx.year, mx.month, mx.day) + timedelta(days=40)
     ev.unionByName(
-        spark.createDataFrame([(sentinel,)], "ts timestamp")
+        local_frame(spark, [(sentinel,)], "ts timestamp")
     ).coalesce(1).write.mode("overwrite").parquet(seed)
 
     src = Source(table="events", timestamp_value_expression="ts")
@@ -1539,7 +1543,8 @@ def q_stream_notify(spark, sf_dir):
             )
             for kind, hx in pay
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "__timestamp timestamp, value double, exceeds boolean,"
         " streak long, state string",
@@ -1566,7 +1571,8 @@ def q_log_patterns(spark, sf_dir):
         ).alias("body")
     )
     patterns = drain.mine_patterns(bodies, text_col="body", sample_size=200_000)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p.pattern, p.sample_count) for p in patterns],
         "pattern string, n long",
     )
@@ -2524,7 +2530,8 @@ def q_sqlast_filters(spark, sf_dir):
         "Body.`json`.`field`",
         "ResourceAttributes.host.name",
     ]
-    fk = spark.createDataFrame(
+    fk = local_frame(
+        spark,
         [
             (f"fk|{k}=>{to_quoted_clickhouse_key_expression(k, known)}",
              datetime(1970, 1, 1), 0)
@@ -2598,8 +2605,8 @@ def q_sqlast_filters(spark, sf_dir):
         ("rwexec|isnull", datetime(1970, 1, 1), c_null),
         ("rwexec|md5", datetime(1970, 1, 1), c_big),
     ]
-    rw = spark.createDataFrame(
-        rw_rows, "part string, __timestamp timestamp, cnt long")
+    rw = local_frame(
+        spark, rw_rows, "part string, __timestamp timestamp, cnt long")
     return base.unionByName(alias_part).unionByName(fk).unionByName(rw)
 
 
@@ -2723,8 +2730,8 @@ def q_offset_pages(spark, sf_dir):
         for r in page:
             rn += 1
             rows_all.append((rn, r["event_id"], r["ts"], r["value"]))
-    return spark.createDataFrame(
-        rows_all, "rn bigint, event_id bigint, ts timestamp, value double"
+    return local_frame(
+        spark, rows_all, "rn bigint, event_id bigint, ts timestamp, value double"
     )
 
 
@@ -2825,7 +2832,7 @@ def q_render_cap(spark, sf_dir):
         for k, v in r.items()
         if k != "__timestamp"
     ]
-    return spark.createDataFrame(flat, "ts_s bigint, series string, value double")
+    return local_frame(spark, flat, "ts_s bigint, series string, value double")
 
 
 O_RENDER_CAP = f"""
@@ -3354,7 +3361,7 @@ _EXPLAIN_CASES = [
 
 def q_lucene_explain(spark, sf_dir):
     rows = [(q, explain_query(q)) for q in _EXPLAIN_CASES]
-    return spark.createDataFrame(rows, "query string, explanation string")
+    return local_frame(spark, rows, "query string, explanation string")
 
 
 O_LUCENE_EXPLAIN = """
@@ -3375,7 +3382,7 @@ SELECT * FROM (VALUES
 
 def q_metadata_fields(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    return spark.createDataFrame(get_all_fields(ev), "field string, type string")
+    return local_frame(spark, get_all_fields(ev), "field string, type string")
 
 
 O_METADATA_FIELDS = """
@@ -4252,7 +4259,8 @@ def q_ann_indexed(spark, sf_dir):
         F.least(d0, d1).cast("double").alias("cos"),
         F.lit(0).cast("int").alias("rank"),
     )
-    km_cent = spark.createDataFrame(
+    km_cent = local_frame(
+        spark,
         [
             ("km|cent", ci, di, float(v), 0)
             for ci, c in enumerate(km_c)
@@ -4268,7 +4276,8 @@ def q_ann_indexed(spark, sf_dir):
     # (round, id) tie order all replay in DuckDB; the driver-side
     # weighted recluster that follows is pytest-pinned pure Python. One
     # row per candidate: (id, round, weight).
-    km_par = spark.createDataFrame(
+    km_par = local_frame(
+        spark,
         [("kmp|cw", int(i), int(r), float(wt), 0) for (i, r, wt) in kmp_rows],
         "part string, query_id long, match_id long, cos double, rank int",
     )
@@ -4435,8 +4444,8 @@ def q_csv_render(spark, sf_dir):
                 f"extapi|s{i}", int(r["ts_bucket"]), grp,
                 float(v) if v is not None else None,
             ))
-    ext = spark.createDataFrame(
-        ext_rows, "part string, ts_s bigint, series string, value double"
+    ext = local_frame(
+        spark, ext_rows, "part string, ts_s bigint, series string, value double"
     )
     return (
         csv.unionByName(cap).unionByName(cat).unionByName(num)
@@ -4941,7 +4950,8 @@ def q_emerging_signals(spark, sf_dir):
         "sampled", "", float(out["summary"]["current"]["sampled"]),
         float(out["summary"]["baseline"]["sampled"]), 0.0, 0.0, "",
     ))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "part string, pattern string, cur double, base double,"
         " cur_n double, base_n double, status string",
@@ -5078,8 +5088,8 @@ def q_trace_waterfall(spark, sf_dir):
             ("bd|p50", 0, key, round(r["p50_ms"], 4)),
             ("bd|p99", 0, key, round(r["p99_ms"], 4)),
         ]
-    return spark.createDataFrame(
-        rows, "part string, k long, s string, v double"
+    return local_frame(
+        spark, rows, "part string, k long, s string, v double"
     )
 
 
@@ -5737,7 +5747,7 @@ def _tmparam_rows(spark, sf_dir):
                 miner.extract_parameters(tpl, body, exact_matching=exact)
             ):
                 out.append((f"{mode}|{tpl}|{mask}|{val}", float(cnt), float(pos)))
-    df = spark.createDataFrame(out, "key string, v1 double, v2 double")
+    df = local_frame(spark, out, "key string, v1 double, v2 double")
     return df.groupBy("key", "v2").agg(F.sum("v1").alias("v1")).select(
         F.lit("tmparam").alias("part"), "key", "v1", "v2"
     )
@@ -5767,7 +5777,8 @@ def q_analytics_insights(spark, sf_dir):
             F.lit(" took "), F.floor("value").cast("string"), F.lit(" ms"),
         ).alias("body")
     )
-    dist = spark.createDataFrame(
+    dist = local_frame(
+        spark,
         [
             (p.pattern, float(p.estimated_count))
             for p in mine_patterns_distributed(ev_bodies, text_col="body")

@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hyperdx_spark.session import local_frame
+
 DEFAULT_MAX_ROWS = 3_000_000   # metadata.ts:56
 MAX_VALUES_PER_KEY = 20        # metadata.ts:60
 
@@ -121,7 +123,7 @@ def get_key_values(
     predicate — values are collected only from matching rows, so filter
     panels show values consistent with the active search."""
     if not keys:
-        return df.sparkSession.createDataFrame([], T.StructType([]))
+        return local_frame(df.sparkSession, [], T.StructType([]))
     src = _capped(df, sample_rows)
 
     def value_of(k: str):
@@ -212,8 +214,10 @@ def get_metadata_mv_key_values(
         p = (F.col("ColumnIdentifier") == column) & F.col("Key").isin(list(keys))
         pred = p if pred is None else (pred | p)
     if pred is None:
-        return mv_df.sparkSession.createDataFrame(
-            [], "ColumnIdentifier string, Key string, Values array<string>"
+        return local_frame(
+            mv_df.sparkSession,
+            [],
+            "ColumnIdentifier string, Key string, Values array<string>",
         )
     return (
         mv_df.where(pred)

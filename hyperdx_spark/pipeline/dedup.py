@@ -49,6 +49,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hyperdx_spark.session import local_frame
 from hyperdx_spark.sqlident import sql_ident
 from hyperdx_spark.pipeline.text import TOKEN_SPLIT, fingerprint, tokens
 
@@ -939,7 +940,7 @@ def _dedup_groups_local(
         ]
     )
     data = [(x, g, x == g) for x, g in labels.items()]
-    return spark.createDataFrame(data, out_schema)
+    return local_frame(spark, data, out_schema)
 
 
 def dedup_groups(

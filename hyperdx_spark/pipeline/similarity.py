@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hyperdx_spark.io import ensure_min_parallelism
+from hyperdx_spark.session import local_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -914,8 +915,8 @@ def _assign(df: DataFrame, cents: DataFrame, vec: str, n: int) -> DataFrame:
     )
     data = [([(r["cent_id"], [float(x) for x in r["cvec"]]) for r in rows],)]
     cbdf = F.broadcast(
-        spark.createDataFrame(
-            data, StructType([StructField("__cents", ArrayType(inner))])
+        local_frame(
+            spark, data, StructType([StructField("__cents", ArrayType(inner))])
         )
     )
     scored = F.transform(
@@ -1227,7 +1228,7 @@ def pq_encode(
     # Janino codegen time, which dwarfs the actual work
     spark = df.sparkSession
     cbdf = F.broadcast(
-        spark.createDataFrame([(books,)], "__cb array<array<array<double>>>")
+        local_frame(spark, [(books,)], "__cb array<array<array<double>>>")
     )
     as_double = (
         _unit(F.col(vec_col))
@@ -1302,7 +1303,7 @@ def _adc_query_tables(
             StructField("__tables", ArrayType(ArrayType(DoubleType()))),
         ]
     )
-    return queries.sparkSession.createDataFrame(table_rows, qt_schema)
+    return local_frame(queries.sparkSession, table_rows, qt_schema)
 
 
 def _adc_residual_tables(
@@ -1379,10 +1380,10 @@ def _adc_residual_tables(
             StructField("__qv", ArrayType(DoubleType())),
         ]
     )
-    qv_df = spark.createDataFrame(
-        [(k, v.tolist()) for k, v in qv.items()], qv_schema
+    qv_df = local_frame(
+        spark, [(k, v.tolist()) for k, v in qv.items()], qv_schema
     )
-    return spark.createDataFrame(rows, pair_schema), qv_df
+    return local_frame(spark, rows, pair_schema), qv_df
 
 
 def _adc_score() -> Column:
@@ -1514,7 +1515,8 @@ def _refit_centroids(
         (r["cent_id"], [c / VEC_SCALE for c in cent])
         for r, cent in zip(rows, icents)
     ]
-    return corpus.sparkSession.createDataFrame(
+    return local_frame(
+        corpus.sparkSession,
         out_rows,
         StructType(
             [
@@ -1582,7 +1584,8 @@ def _residuals_col(
 
     ids, Cn = _unit_cent_matrix(cent_rows)
     spark = df.sparkSession
-    cdf = spark.createDataFrame(
+    cdf = local_frame(
+        spark,
         [(cid, [float(x) for x in row]) for cid, row in zip(ids, Cn)],
         StructType(
             [
@@ -1680,9 +1683,9 @@ def build_ivfpq_index(
     # before a trailing meta write would leave a fully-readable residual
     # index silently mis-scored as raw — meta-first means a torn build
     # instead fails loudly on the missing /lists read (review r16)
-    spark.createDataFrame(
-        [(bool(residual),)], "residual boolean"
-    ).write.mode("overwrite").parquet(path + "/meta")
+    local_frame(spark, [(bool(residual),)], "residual boolean").write.mode(
+        "overwrite"
+    ).parquet(path + "/meta")
     c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("vec"))
     assign = _assign_arrow if arrow else _assign
     assigned = assign(c, cents, "vec", 1)
@@ -1719,7 +1722,7 @@ def build_ivfpq_index(
             "overwrite"
         ).partitionBy("cent_id").parquet(path + "/lists")
     cents.write.mode("overwrite").parquet(path + "/centroids")
-    spark.createDataFrame([(books,)], "__cb array<array<array<double>>>").write.mode(
+    local_frame(spark, [(books,)], "__cb array<array<array<double>>>").write.mode(
         "overwrite"
     ).parquet(path + "/codebooks")
 
@@ -1958,7 +1961,8 @@ def pca_project(
         for ev in model["explained_variance"]
     ]
     mdf = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(model["mean"], model["components"], scale)],
             "__mean array<double>, __w array<array<double>>, __sc array<double>",
         )

@@ -11,7 +11,10 @@ local[32]):
 * Timestamps: the engine standardizes on UTC micro-second timestamps
   (ClickHouse DateTime64(9) loses ns -> micro; see io.py).
 * Arrow enabled for the few Pandas-UDF code paths (exp-histogram merge,
-  multimodal decode) — everything else stays JVM-side.
+  multimodal decode) — everything else stays JVM-side. Arrow also carries
+  every row built on the driver back into Spark: :func:`local_frame` ships
+  them as one Arrow table that Spark plans as a ``LocalTableScan``, with no
+  Python-worker RDD.
 """
 
 from __future__ import annotations
@@ -21,7 +24,8 @@ import uuid
 from itertools import islice
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, _create_converter, _make_type_verifier
 
 # Runtime-settable SQL confs every entry point re-asserts, so the engine
 # behaves identically whether it owns the session or receives one (the
@@ -166,3 +170,36 @@ def overlapped(thunks, ahead=None):
     it = results()
     next(it)
     return it
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame of driver-side *rows* under *schema* (a StructType or its
+    DDL string), with the rows and types ``spark.createDataFrame(list,
+    schema)`` gives.
+
+    Each row goes through the list path's own steps: its verifier, so a
+    wrong type or a None in a non-nullable field raises the same error, and
+    its conversion to internal values, so a naive ``datetime`` stays wall
+    time in the driver's local time zone (Arrow would read it in the
+    session time zone). The rows then go to Spark as one Arrow table, which
+    Spark plans as a ``LocalTableScan`` with no Python worker (above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark itself
+    switches to an RDD).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    if not schema.fields:
+        # an Arrow batch without columns carries no rows: ship one NULL
+        # column and drop it
+        return local_frame(spark, [(None,) for _ in rows], "_ boolean").drop("_")
+    verify, to_tuple = _make_type_verifier(schema), _create_converter(schema)
+    data = []
+    for r in rows:
+        verify(r)
+        data.append(schema.toInternal(to_tuple(r)))
+    arr = pa.array(data, type=pa.struct(list(to_arrow_schema(schema))))
+    table = pa.Table.from_batches([pa.RecordBatch.from_struct_array(arr)])
+    return spark.createDataFrame(table, schema)

@@ -17,6 +17,7 @@ watermark — state size = cardinality(groups) x (watermark / window) rows.
 
 from __future__ import annotations
 
+from datetime import timezone
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -243,13 +244,15 @@ def stream_alert_notifications(
             # the reference rebuilds the template view per notification
             # with the current alert state (template.ts:556+)
             kwargs["view"] = {**view, "state": state}
+        # collect() gives driver-local wall time; render the UTC instant
+        start = r[ts_col].astimezone(timezone.utc)
         rendered, requests = render_alert_notifications(
             title=title,
             cfg=alert_cfg,
             state=state,
             value=v,
-            start_time=r[ts_col],
-            end_time=r[ts_col] + bucket_duration,
+            start_time=start,
+            end_time=start + bucket_duration,
             group=group,
             is_grouped=bool(group_cols),
             **kwargs,

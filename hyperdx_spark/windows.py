@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from hyperdx_spark.granularity import auto_granularity, granularity_seconds
 from hyperdx_spark.model import ChartConfig
-from hyperdx_spark.session import overlapped
+from hyperdx_spark.session import local_frame, overlapped
 
 ONE_MIN_WINDOW = 60
 # How many windows ahead offset_paginated_search keeps in flight (compile +
@@ -179,7 +179,7 @@ def _pin_series_limit(
     import uuid
 
     view = f"__hdx_series_pin_{uuid.uuid4().hex[:12]}"
-    spark.createDataFrame(pinned, schema=pinned_df.schema).createOrReplaceTempView(view)
+    local_frame(spark, pinned, pinned_df.schema).createOrReplaceTempView(view)
     tup = "(" + ", ".join(cfg.group_by) + ")"
     cond = f"{tup} IN (SELECT * FROM {view})"
     return (

@@ -823,3 +823,45 @@ def test_round_down_to_reference():
         round_down_to(0)
     with _pytest.raises(ValueError):
         round_down_to(-5)
+
+
+@pytest.mark.parametrize("name", ["q_alert_backtest", "q_stream_notify"])
+def test_alert_entries_ignore_the_driver_time_zone(spark, monkeypatch, name):
+    """Notification titles and bodies render from UTC instants, so the
+    sf0.01 answer under a non-UTC driver equals the UTC answer and its
+    DuckDB oracle (``collect()`` hands back driver-local wall times)."""
+    import importlib.util
+    import os
+    import time
+
+    import duckdb
+
+    import __spark_entry__ as e
+    from conftest import SF_DIR_ORACLE as sf
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "check_correctness", os.path.join(repo, "tools", "check_correctness.py")
+    )
+    cc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(cc)
+
+    def canon(pdf):
+        return cc.rows_to_canon(list(pdf.columns), cc.pdf_rows(pdf), cc.canon_strict)
+
+    def answer(tz):
+        monkeypatch.setenv("TZ", tz)
+        time.tzset()
+        return canon(e.queries()[name](spark, sf).toPandas())
+
+    try:
+        utc, new_york = answer("UTC"), answer("America/New_York")
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')")
+    assert len(utc) > 0
+    assert new_york == utc
+    assert utc == canon(con.execute(e.oracle_sql()[name]).df())
