@@ -662,9 +662,7 @@ FROM events, eff WHERE mx > mn_lin GROUP BY 1, 2
 
 def q_raw_sql_macros(spark, sf_dir):
     from hyperdx_spark import macros
-    from hyperdx_spark.io import register_tables
 
-    register_tables(spark, sf_dir, ("events",), time_filter=("ts", *RANGE))
     sql = macros.replace_macros(
         "SELECT $__timeInterval(ts) AS __timestamp, event_type, count(*) AS n"
         " FROM $__sourceTable WHERE $__timeFilter(ts) AND $__filters"
@@ -674,7 +672,8 @@ def q_raw_sql_macros(spark, sf_dir):
         table="events",
         filters_sql="value >= 10",
     )
-    return spark.sql(sql)
+    events = load_table(spark, sf_dir, "events", time_filter=("ts", *RANGE))
+    return macros.sql_with_frames(spark, sql, events=events)
 
 
 O_RAW_SQL_MACROS = f"""
@@ -787,7 +786,6 @@ def q_stream_tail(spark, sf_dir):
     with a 1-hour watermark, return the day-1 buckets (all closed by the
     final watermark, so the emitted set is deterministic)."""
     import tempfile
-    import uuid
 
     from hyperdx_spark.streaming import live_tail, windowed_agg
 
@@ -806,13 +804,14 @@ def q_stream_tail(spark, sf_dir):
         watermark="1 hour",
         group_by=["event_type"],
     )
-    name = "tail_" + uuid.uuid4().hex[:8]
+    rows = []  # closed buckets only (append mode): a few dozen rows
     q = (
-        agg.writeStream.format("memory").queryName(name)
+        agg.writeStream.foreachBatch(lambda b, _: rows.extend(b.collect()))
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination(300)
-    return spark.table(name).where(F.col("__timestamp") < F.lit(datetime(2024, 1, 2)))
+    out = local_frame(spark, rows, agg.schema)
+    return out.where(F.col("__timestamp") < F.lit(datetime(2024, 1, 2)))
 
 
 O_STREAM_TAIL = """
@@ -3002,10 +3001,9 @@ def q_builder_sql(spark, sf_dir):
     renders to an editable $__-macro SQL template, which is then executed
     through the macro engine — result must equal the compiled config."""
     from hyperdx_spark.builder_sql import builder_to_raw_sql
-    from hyperdx_spark.io import register_tables
-    from hyperdx_spark.macros import replace_macros
+    from hyperdx_spark.macros import replace_macros, sql_with_frames
 
-    ev = load_table(spark, sf_dir, "events")
+    events = load_table(spark, sf_dir, "events", time_filter=("ts", *RANGE))
     cfg = ChartConfig(
         source=_src(),
         select=[
@@ -3018,14 +3016,13 @@ def q_builder_sql(spark, sf_dir):
         group_by=["event_type"],
         date_range=RANGE,
     )
-    tpl = builder_to_raw_sql(cfg, schema=ev.schema)
+    tpl = builder_to_raw_sql(cfg, schema=events.schema)
     if tpl.is_error:
         raise RuntimeError(tpl.error)
     sql = replace_macros(
         tpl.sql, date_range=RANGE, interval_seconds=86400, table="events"
     )
-    register_tables(spark, sf_dir, ("events",), time_filter=("ts", *RANGE))
-    base = spark.sql(sql).select(
+    base = sql_with_frames(spark, sql, events=events).select(
         F.lit("tpl").alias("part"), "__timestamp", "event_type", "cnt", "avg_v"
     )
     # r10: the series-limit ranking CTE is macro-ized into the template
@@ -3038,12 +3035,14 @@ def q_builder_sql(spark, sf_dir):
         series_limit=2,
         date_range=RANGE,
     )
-    sl_tpl = builder_to_raw_sql(sl_cfg, schema=ev.schema)
+    sl_tpl = builder_to_raw_sql(sl_cfg, schema=events.schema)
     if sl_tpl.is_error:
         raise RuntimeError(sl_tpl.error)
     assert "__hdx_series_limit" in sl_tpl.sql
-    sl = spark.sql(
-        replace_macros(sl_tpl.sql, date_range=RANGE, interval_seconds=86400, table="events")
+    sl = sql_with_frames(
+        spark,
+        replace_macros(sl_tpl.sql, date_range=RANGE, interval_seconds=86400, table="events"),
+        events=events,
     ).select(
         F.lit("slcte").alias("part"), "__timestamp", "event_type", "cnt",
         F.lit(None).cast("double").alias("avg_v"),
@@ -3464,9 +3463,9 @@ def q_gauge(spark, sf_dir):
     """§2.9 gauge semantics: last-per-series-bucket + isDelta extrapolation.
     r11 adds tplgauge/tplrate: the user-editable raw-SQL templates
     (metrics.metric_to_raw_sql, builderToRawSql.ts:93-132) EXECUTED through
-    replace_macros + spark.sql — the gate now value-checks the template
+    replace_macros + sql_with_frames — the gate now value-checks the template
     text itself, not just its pytest equality to the DataFrame path."""
-    from hyperdx_spark.macros import replace_macros
+    from hyperdx_spark.macros import replace_macros, sql_with_frames
     from hyperdx_spark.metrics import metric_to_raw_sql
 
     last = q_gauge_last(spark, sf_dir).select(
@@ -3475,15 +3474,17 @@ def q_gauge(spark, sf_dir):
     delta = q_gauge_delta(spark, sf_dir).select(
         F.lit("delta").alias("part"), "__timestamp", "event_type", F.col("value").alias("v")
     )
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("metric_tpl_events")
+    ev = load_table(spark, sf_dir, "events")
     tables = {"gauge": "metric_tpl_events", "sum": "metric_tpl_events"}
     gauge_tpl = metric_to_raw_sql(
         "gauge", ts="ts", value="value",
         series_cols=["user_id", "event_type"], agg="avg", value_alias="v",
     )
-    tplgauge = spark.sql(
+    tplgauge = sql_with_frames(
+        spark,
         replace_macros(gauge_tpl, date_range=_TPL_RANGE,
-                       interval_seconds=86400, metric_tables=tables)
+                       interval_seconds=86400, metric_tables=tables),
+        metric_tpl_events=ev,
     ).select(
         F.lit("tplgauge").alias("part"), "__timestamp",
         F.lit("").alias("event_type"), F.round("v", 4).alias("v"),
@@ -3492,9 +3493,11 @@ def q_gauge(spark, sf_dir):
         "sum", ts="ts", value="value", series_cols=["event_type"],
         value_alias="v",
     )
-    tplrate = spark.sql(
+    tplrate = sql_with_frames(
+        spark,
         replace_macros(sum_tpl, date_range=_TPL_RANGE,
-                       interval_seconds=86400, metric_tables=tables)
+                       interval_seconds=86400, metric_tables=tables),
+        metric_tpl_events=ev,
     ).select(
         F.lit("tplrate").alias("part"), "__timestamp",
         F.lit("").alias("event_type"), F.round("v", 4).alias("v"),
@@ -3532,13 +3535,13 @@ def q_histogram(spark, sf_dir):
     """§2.9 explicit-bounds histograms: count series + linear-interp quantile.
     r11 adds tplq: the histogram raw-SQL template (one statement of
     higher-order SQL, metrics.metric_to_raw_sql) EXECUTED via
-    replace_macros + spark.sql over a CUMULATIVE per-series fixture built
+    replace_macros + sql_with_frames over a CUMULATIVE per-series fixture built
     from the same hourly count arrays as q_hist_quantile — the template's
     lag-window delta recovery must reproduce the hourly deltas exactly, so
     its day-level p51.7 equals the direct oracle."""
     from pyspark.sql import Window
 
-    from hyperdx_spark.macros import replace_macros
+    from hyperdx_spark.macros import replace_macros, sql_with_frames
     from hyperdx_spark.metrics import metric_to_raw_sql
 
     cnt = q_hist_count(spark, sf_dir).select(
@@ -3586,14 +3589,15 @@ def q_histogram(spark, sf_dir):
             "ExplicitBounds", F.array(*[F.lit(50.0 * k) for k in range(1, 10)])
         )
     )
-    cdf.createOrReplaceTempView("hist_tpl_view")
     tpl = metric_to_raw_sql(
         "histogram", ts="h", series_cols=["event_type"], level=0.517,
         value_alias="v",
     )
-    tplq = spark.sql(
+    tplq = sql_with_frames(
+        spark,
         replace_macros(tpl, date_range=_TPL_RANGE, interval_seconds=86400,
-                       metric_tables={"histogram": "hist_tpl_view"})
+                       metric_tables={"histogram": "hist_tpl_view"}),
+        hist_tpl_view=cdf,
     ).select(
         F.lit("tplq").alias("part"), "__timestamp",
         F.lit("").alias("event_type"), F.round("v", 4).alias("v"),

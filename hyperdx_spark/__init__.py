@@ -25,7 +25,7 @@ Layout:
 """
 
 from hyperdx_spark.session import get_spark, tune_session
-from hyperdx_spark.io import load_table, register_tables
+from hyperdx_spark.io import load_table
 from hyperdx_spark.model import ChartConfig, Source, SelectCol, SortSpec, SqlFilter, SqlAstFilter
 from hyperdx_spark.compile import compile_chart_config
 from hyperdx_spark.display import (
@@ -40,7 +40,6 @@ __all__ = [
     "get_spark",
     "tune_session",
     "load_table",
-    "register_tables",
     "ChartConfig",
     "Source",
     "SelectCol",

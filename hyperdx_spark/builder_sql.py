@@ -18,7 +18,7 @@ defaults granularity to 'auto'), and a seriesLimit macro-izes the
 (builderToRawSql.test.ts:197).
 
 The generated template is executable by this engine's own macro path
-(``macros.replace_macros`` + ``spark.sql`` over ``io.register_tables``) and
+(``macros.replace_macros`` + ``macros.sql_with_frames``) and
 must produce the same result as compiling the DISPLAY-CONVERTED config —
 the driver entry asserts exactly that. For time-series display types that
 means granularity defaults to 'auto' (a line chart ALWAYS buckets, even if

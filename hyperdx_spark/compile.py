@@ -448,6 +448,7 @@ def compile_chart_config(
 def _compile(
     spark: SparkSession, config: ChartConfig, sf_dir: Optional[str],
     df: Optional[DataFrame], settings: QuerySettings, ctes: dict[str, DataFrame],
+    series_pin: Optional[DataFrame] = None,
 ) -> DataFrame:
     source = config.source
     # CTEs (renderWith): each sub-config compiles to a lazy frame in a
@@ -573,7 +574,9 @@ def _compile(
             and bucket_seconds is not None
             and config.select_group_by
         ):
-            out = _apply_series_limit(out, group_names, value_alias, config.series_limit)
+            out = _apply_series_limit(
+                out, group_names, value_alias, config.series_limit, ranking=series_pin
+            )
         if config.fill_nulls is not None and bucket_seconds is not None and config.date_range:
             out = _fill_buckets(
                 spark, out, ts_alias, group_names, aliases,
@@ -607,6 +610,7 @@ def _apply_series_limit(
     n: int,
     *,
     finite_guard: bool = False,
+    ranking: Optional[DataFrame] = None,
 ) -> DataFrame:
     """Top-N series semi-join (__hdx_series_limit CTE,
     renderChartConfig.ts:1308-1431): rank groups by max of the plotted value,
@@ -623,26 +627,31 @@ def _apply_series_limit(
     (ts:1398-1403): a ratio bucket with a zero denominator yields ±inf/NaN,
     which would otherwise hand top-N slots to whichever groups hit a sparse
     bucket.
+
+    A given ``ranking`` (the chunked path's top-N over the full date range,
+    ``windows.chunked_chart``) replaces the one ranked from *out*, so every
+    chunk keeps the same series.
     """
     if value_alias is None or not group_names:
         return out
-    v = F.col(value_alias)
-    if finite_guard:
-        ranked_v = F.when(
-            ~(F.isnan(v) | (v == float("inf")) | (v == float("-inf"))), v
-        ).otherwise(F.lit(float("-inf")))
-    else:
-        ranked_v = F.when(F.isnan(v), None).otherwise(v)
-    peak = F.max(ranked_v)
-    not_null = reduce_and([F.col(g).isNotNull() for g in group_names])
-    ranking = (
-        out.where(not_null)
-        .groupBy(*[F.col(g) for g in group_names])
-        .agg(peak.alias("__peak"))
-        .orderBy(F.desc_nulls_last("__peak"), *[F.asc(g) for g in group_names])
-        .limit(n)
-        .select(*group_names)
-    )
+    if ranking is None:
+        v = F.col(value_alias)
+        if finite_guard:
+            ranked_v = F.when(
+                ~(F.isnan(v) | (v == float("inf")) | (v == float("-inf"))), v
+            ).otherwise(F.lit(float("-inf")))
+        else:
+            ranked_v = F.when(F.isnan(v), None).otherwise(v)
+        peak = F.max(ranked_v)
+        not_null = reduce_and([F.col(g).isNotNull() for g in group_names])
+        ranking = (
+            out.where(not_null)
+            .groupBy(*[F.col(g) for g in group_names])
+            .agg(peak.alias("__peak"))
+            .orderBy(F.desc_nulls_last("__peak"), *[F.asc(g) for g in group_names])
+            .limit(n)
+            .select(*group_names)
+        )
     cols = out.columns
     return out.join(F.broadcast(ranking), on=group_names, how="left_semi").select(*cols)
 

@@ -1,4 +1,4 @@
-"""Table loading / registration.
+"""Table loading.
 
 The driver's synthetic tables (TESTDATA.md) are parquet files with INT64
 TIMESTAMP(NANOS) columns, which Spark's vectorized reader rejects. With
@@ -34,19 +34,6 @@ def _exact_micros(dt: datetime) -> int:
     UTC, consistent with F.lit(dt) under the UTC session timezone."""
     epoch = _EPOCH_NAIVE if dt.tzinfo is None else _EPOCH_UTC
     return (dt - epoch) // _US
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 @lru_cache(maxsize=256)
@@ -229,35 +216,6 @@ def export_csv(
             w.writerows([tuple(r) for r in rows])
         return
     df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
-
-
-def nanos_timestamp_columns(sf_dir: str, name: str) -> tuple[str, ...]:
-    return _nanos_timestamp_cols(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    names: tuple[str, ...] = TABLES,
-    time_filter: tuple[str, "datetime", "datetime"] | None = None,
-) -> None:
-    """Register each table as a temp view (used by raw-SQL macros and tests).
-
-    ``time_filter=(col, start, end)`` is forwarded to :func:`load_table` for
-    every table whose nanos-stored column matches *col*: the range predicate
-    is applied on the raw nanosecond long so it reaches ``PushedFilters`` on
-    the parquet scan. A raw-SQL ``$__timeFilter`` residual on the converted
-    timestamp column is then a no-op row filter over already-pruned row
-    groups instead of a full scan.
-    """
-    for name in names:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        tf = None
-        if time_filter is not None and time_filter[0] in _nanos_timestamp_cols(path):
-            tf = time_filter
-        load_table(spark, sf_dir, name, time_filter=tf).createOrReplaceTempView(name)
 
 
 def ensure_min_parallelism(

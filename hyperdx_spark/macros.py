@@ -5,7 +5,8 @@ Parity target: ``packages/common-utils/src/macros.ts`` — macro set :45-150
 timeInterval[_ms], interval_s), bracket-aware argument parsing :211-238,
 longest-name-first replacement and filters/sourceTable handling :288-369.
 Expansions emit Spark SQL instead of ClickHouse SQL; the template then runs
-through ``spark.sql`` against registered views.
+through :func:`sql_with_frames`, which binds its tables as DataFrames for
+that one call.
 """
 
 from __future__ import annotations
@@ -154,6 +155,19 @@ def replace_macros(
             replacement = replacements[name](args)
             sql = sql[: m.start()] + replacement + sql[m.end() + consumed:]
     return sql
+
+
+def sql_with_frames(spark, sql: str, **frames):
+    """Run expanded *sql* with each backtick-quoted table named in *frames*
+    (``$__sourceTable`` emits `` `name` ``) bound to that DataFrame for this
+    call only: PySpark's ``spark.sql(text, name=frame)`` formatter binds it
+    under a unique view name and drops the view before returning. Every
+    other brace is doubled so the formatter keeps it literal
+    (Lucene-compiled SQL carries ``\\p{Punct}``)."""
+    text = sql.replace("{", "{{").replace("}", "}}")
+    for name in frames:
+        text = text.replace(f"`{name}`", f"`{{{name}}}`")
+    return spark.sql(text, **frames)
 
 
 TIME_RANGE_MACROS = (

@@ -25,11 +25,6 @@ from pyspark.sql import functions as F
 from hyperdx_spark.sqlident import sql_ident
 
 
-def series_hash(*cols: Column) -> Column:
-    """Series identity hash (ref histogram.ts:61-62 cityHash64 analogue)."""
-    return F.xxhash64(*cols)
-
-
 def default_metric_alias(
     agg_fn: str, metric_name: str, *, is_delta: bool = False
 ) -> str:

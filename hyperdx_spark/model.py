@@ -145,7 +145,7 @@ class ChartConfig:
 
     source: Source
     # CTEs (renderWith, renderChartConfig.ts:1549-1617; types.ts:1307-1332):
-    # each name -> sub-config compiled first and registered as a temp view;
+    # each name -> sub-config compiled first into a compile-local frame;
     # the outer query (or another CTE) references it by table name.
     # The reference nests one level; we allow CTEs referencing earlier CTEs.
     ctes: "Sequence[tuple[str, ChartConfig]]" = field(default_factory=list)

@@ -506,9 +506,10 @@ def _row_estimate(mv: MVConfig) -> Optional[int]:
         return None
 
 
-def _mv_view(spark: SparkSession, mv: MVConfig, cfg: ChartConfig, name: str) -> str:
-    """Register the rollup parquet (partition-pruned to the config's aligned
-    range) as a temp view and return its name."""
+def _mv_frame(spark: SparkSession, mv: MVConfig, date_range) -> DataFrame:
+    """The rollup parquet, partition-pruned to *date_range* (the rewritten
+    config's aligned range) on the partition column itself — the ts filter
+    compile adds can't reach directory pruning."""
     mv_df = spark.read.parquet(mv.path)
     if "__batch" in mv_df.columns:
         # stream-maintained rollup (streaming/mv_maintain.py): parts keyed by
@@ -516,17 +517,21 @@ def _mv_view(spark: SparkSession, mv: MVConfig, cfg: ChartConfig, name: str) -> 
         # irrelevant here
         mv_df = mv_df.drop("__batch")
     if "__bucket_date" in mv_df.columns:
-        if cfg.date_range is not None:
-            start, end = cfg.date_range
+        if date_range is not None:
+            start, end = date_range
             mv_df = mv_df.where(
                 F.col("__bucket_date").between(
                     F.to_date(F.lit(start)), F.to_date(F.lit(end))
                 )
             )
         mv_df = mv_df.drop("__bucket_date")
-    view = f"__hdx_mv_{name}"
-    mv_df.createOrReplaceTempView(view)
-    return view
+    return mv_df
+
+
+def _smallest(wins: list[MVExplanation]) -> MVExplanation:
+    return min(
+        wins, key=lambda e: e.row_estimate if e.row_estimate is not None else float("inf")
+    )
 
 
 def compile_with_mv(
@@ -541,64 +546,38 @@ def compile_with_mv(
     pick the smallest covering rollup by row estimate, else fall back to the
     raw table. CTE sub-configs are optimized independently first
     (tryOptimizeConfig's config.with pass, :565-640) — a rewritten CTE
-    reads a registered rollup view while the outer query is untouched.
+    reads its rollup frame, bound for this compile only under
+    ``__hdx_mv_<cte name>``, while the outer query is untouched.
     Returns (DataFrame, per-MV explanations for the outer config)."""
     from dataclasses import replace as _replace
 
-    from hyperdx_spark.compile import compile_chart_config
+    from hyperdx_spark.compile import DEFAULT_SETTINGS, _compile
 
+    settings = settings or DEFAULT_SETTINGS
+    frames: dict[str, DataFrame] = {}
     if cfg.ctes:
         new_ctes = []
-        changed = False
         for name, sub in cfg.ctes:
             sub_wins = [
                 e for e in (try_rewrite_with_mv(sub, mv) for mv in mvs) if e.success
             ]
             if sub_wins:
-                best = min(
-                    sub_wins,
-                    key=lambda e: e.row_estimate
-                    if e.row_estimate is not None
-                    else float("inf"),
-                )
-                new_sub = rewritten(sub, best.mv)
-                view = _mv_view(spark, best.mv, new_sub, name)
-                new_sub = _replace(new_sub, source=_replace(new_sub.source, table=view))
-                new_ctes.append((name, new_sub))
-                changed = True
-            else:
-                new_ctes.append((name, sub))
-        if changed:
-            cfg = _replace(cfg, ctes=new_ctes)
+                best = _smallest(sub_wins).mv
+                sub = rewritten(sub, best)
+                table = f"__hdx_mv_{name}"
+                frames[table] = _mv_frame(spark, best, sub.date_range)
+                sub = _replace(sub, source=_replace(sub.source, table=table))
+            new_ctes.append((name, sub))
+        cfg = _replace(cfg, ctes=new_ctes)
 
     explanations = [try_rewrite_with_mv(cfg, mv) for mv in mvs]
     winners = [e for e in explanations if e.success]
     if winners:
-        best = min(
-            winners,
-            key=lambda e: e.row_estimate if e.row_estimate is not None else float("inf"),
-        )
-        new_cfg = rewritten(cfg, best.mv)
-        mv_df = spark.read.parquet(best.mv.path)
-        if "__bucket_date" in mv_df.columns:
-            if new_cfg.date_range is not None:
-                # prune rollup partitions on the partition column itself —
-                # the ts filter compile adds can't reach directory pruning
-                start, end = new_cfg.date_range
-                mv_df = mv_df.where(
-                    F.col("__bucket_date").between(
-                        F.to_date(F.lit(start)), F.to_date(F.lit(end))
-                    )
-                )
-            mv_df = mv_df.drop("__bucket_date")
-        return (
-            compile_chart_config(spark, new_cfg, df=mv_df, settings=settings),
-            explanations,
-        )
-    return (
-        compile_chart_config(spark, cfg, sf_dir=sf_dir, df=df, settings=settings),
-        explanations,
-    )
+        best = _smallest(winners).mv
+        new_cfg = rewritten(cfg, best)
+        mv_df = _mv_frame(spark, best, new_cfg.date_range)
+        return _compile(spark, new_cfg, None, mv_df, settings, {}), explanations
+    return _compile(spark, cfg, sf_dir, df, settings, frames), explanations
 
 
 _TO_INTERVAL_FN_RE = re.compile(r"toInterval(Second|Minute|Hour|Day)\((\d+)\)")

@@ -82,13 +82,6 @@ def encode_png(arr: np.ndarray) -> bytes:
     )
 
 
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    p = a.astype(np.int16) + b.astype(np.int16) - c.astype(np.int16)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    out = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-    return out.astype(np.uint8)
-
-
 def decode_png(data: bytes) -> np.ndarray:
     """(h, w, channels) uint8 from an 8-bit gray/RGB(A) PNG."""
     if not data.startswith(PNG_MAGIC):

@@ -595,19 +595,6 @@ def winnow_pairs(
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(text_col: str, num_hashes: int = 32, ngram: int = 3) -> Column:
-    """MinHash signature: per seed i, min over shingles of
-    xxhash64(i, shingle) — a min-wise family over 64-bit ints. Longs beat a
-    digest-string family ~10×: no hex allocation, primitive min.
-    array<long> of length num_hashes.
-    """
-    sh = word_shingles(text_col, ngram)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(sh, lambda s: F.xxhash64(i, s))),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     *,

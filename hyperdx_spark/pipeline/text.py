@@ -71,16 +71,6 @@ def quality_score(col: Column | str) -> Column:
     return (length_term + punct_term + digit_term + sw_term) / F.lit(4.0)
 
 
-def detect_language(col: Column | str, threshold: float = 0.08) -> Column:
-    """Stopword-density language heuristic: 'en' when the English stopword
-    ratio clears the threshold, else 'unknown'. (A full n-gram profile model
-    slots in here; the interface — text column in, label column out — holds.)
-    """
-    return F.when(stopword_ratio(col) >= threshold, F.lit("en")).otherwise(
-        F.lit("unknown")
-    )
-
-
 # Character-trigram profiles (space-padded, lowercase) of the highest-
 # frequency trigrams per language — the classic Cavnar-Trenkle n-gram
 # category profile, abbreviated to a compact discriminative set per

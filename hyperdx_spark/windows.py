@@ -150,12 +150,12 @@ def granularity_aligned_windows(
 
 def _pin_series_limit(
     spark: SparkSession, cfg: ChartConfig, sf_dir: Optional[str]
-) -> tuple[ChartConfig, Optional[str]]:
+) -> Optional[DataFrame]:
     """Series-limit pinning (useChartConfig.tsx:159-178): rank top-N groups
-    over the FULL date range once, then filter every chunk to that set."""
+    over the FULL date range once; every chunk's series-limit semi-join
+    then takes the returned frame (<= series_limit rows, NULL groups
+    already left out by the full query's ranking) as its ranking."""
     from hyperdx_spark.compile import compile_chart_config
-    from hyperdx_spark.model import SqlFilter
-
     from hyperdx_spark.display import has_positive_series_limit
 
     # same gates as compile._apply_series_limit (renderSeriesLimitCte):
@@ -166,30 +166,12 @@ def _pin_series_limit(
         or cfg.granularity is None
         or not cfg.select_group_by
     ):
-        return cfg, None
+        return None
     full = compile_chart_config(spark, cfg, sf_dir=sf_dir)
     group_cols = [c for c in full.columns if c in cfg.group_by or c.startswith("__group_")]
     pinned_df = full.select(*group_cols).distinct()
     pinned = [tuple(r) for r in pinned_df.collect()]  # bounded by series_limit
-    if not pinned:
-        return replace(cfg, series_limit=None), None
-    # The pinned set rides as a temp view + IN-subquery instead of inlined
-    # SQL literals: no value-escaping surface, and Catalyst turns it into a
-    # broadcast semi-join against the tiny (<= series_limit rows) set.
-    import uuid
-
-    view = f"__hdx_series_pin_{uuid.uuid4().hex[:12]}"
-    local_frame(spark, pinned, pinned_df.schema).createOrReplaceTempView(view)
-    tup = "(" + ", ".join(cfg.group_by) + ")"
-    cond = f"{tup} IN (SELECT * FROM {view})"
-    return (
-        replace(
-            cfg,
-            series_limit=None,
-            filters=list(cfg.filters) + [SqlFilter(condition=cond, type="sql")],
-        ),
-        view,
-    )
+    return local_frame(spark, pinned, pinned_df.schema)
 
 
 def chunked_chart(
@@ -203,7 +185,7 @@ def chunked_chart(
     job over a granularity-aligned sub-range. Concatenating all results
     equals the unchunked query (chunks never overlap; series limit is
     pinned globally first)."""
-    from hyperdx_spark.compile import compile_chart_config
+    from hyperdx_spark.compile import DEFAULT_SETTINGS, _compile, compile_chart_config
 
     if not should_use_chunking(cfg):
         yield (
@@ -216,22 +198,15 @@ def chunked_chart(
             compile_chart_config(spark, cfg, sf_dir=sf_dir, settings=settings),
         )
         return
-    pinned_cfg, pin_view = _pin_series_limit(spark, cfg, sf_dir)
-    try:
-        for w in granularity_aligned_windows(cfg, durations):
-            sub = replace(
-                pinned_cfg,
-                date_range=(w.start, w.end),
-                date_range_end_inclusive=w.end_inclusive,
-                fill_nulls=None,  # spine is per-chunk; fill at merge time instead
-            )
-            yield w, compile_chart_config(spark, sub, sf_dir=sf_dir, settings=settings)
-    finally:
-        # Every chunk's plan is resolved against the pin view at compile time
-        # above, so the view can go as soon as iteration ends — long-lived
-        # dashboard sessions must not accumulate catalog entries.
-        if pin_view is not None:
-            spark.catalog.dropTempView(pin_view)
+    pin = _pin_series_limit(spark, cfg, sf_dir)
+    for w in granularity_aligned_windows(cfg, durations):
+        sub = replace(
+            cfg,
+            date_range=(w.start, w.end),
+            date_range_end_inclusive=w.end_inclusive,
+            fill_nulls=None,  # spine is per-chunk; fill at merge time instead
+        )
+        yield w, _compile(spark, sub, sf_dir, None, settings or DEFAULT_SETTINGS, {}, pin)
 
 
 def run_chunked(

@@ -506,8 +506,8 @@ def test_materialized_substitute_spellings():
 
 def test_builder_to_raw_sql_roundtrip(spark, sf_dir, events_source):
     from hyperdx_spark.builder_sql import builder_to_raw_sql
-    from hyperdx_spark.io import load_table, register_tables
-    from hyperdx_spark.macros import replace_macros
+    from hyperdx_spark.io import load_table
+    from hyperdx_spark.macros import replace_macros, sql_with_frames
 
     ev = load_table(spark, sf_dir, "events")
     cfg = ChartConfig(
@@ -527,8 +527,8 @@ def test_builder_to_raw_sql_roundtrip(spark, sf_dir, events_source):
     assert not tpl.is_error
     assert "$__timeFilter" in tpl.sql and "$__sourceTable" in tpl.sql
     sql = replace_macros(tpl.sql, date_range=RANGE, interval_seconds=86400, table="events")
-    register_tables(spark, sf_dir, ("events",), time_filter=("ts", *RANGE))
-    got = sorted(map(tuple, spark.sql(sql).collect()))
+    events = load_table(spark, sf_dir, "events", time_filter=("ts", *RANGE))
+    got = sorted(map(tuple, sql_with_frames(spark, sql, events=events).collect()))
     want = sorted(map(tuple, compile_chart_config(spark, cfg, sf_dir=sf_dir).collect()))
     assert got == want
 
@@ -565,8 +565,8 @@ def test_builder_to_raw_sql_series_limit_cte(spark, sf_dir, events_source):
     the __hdx_series_limit ranking CTE with the LIMIT inlined, and the
     executed template equals the compiled config."""
     from hyperdx_spark.builder_sql import builder_to_raw_sql
-    from hyperdx_spark.io import register_tables
-    from hyperdx_spark.macros import replace_macros
+    from hyperdx_spark.io import load_table
+    from hyperdx_spark.macros import replace_macros, sql_with_frames
 
     cfg = ChartConfig(
         source=events_source,
@@ -582,8 +582,8 @@ def test_builder_to_raw_sql_series_limit_cte(spark, sf_dir, events_source):
     assert "LIMIT 2" in tpl.sql
     assert "$__timeInterval" in tpl.sql
     sql = replace_macros(tpl.sql, date_range=RANGE, interval_seconds=86400, table="events")
-    register_tables(spark, sf_dir, ("events",), time_filter=("ts", *RANGE))
-    got = sorted(map(tuple, spark.sql(sql).collect()))
+    events = load_table(spark, sf_dir, "events", time_filter=("ts", *RANGE))
+    got = sorted(map(tuple, sql_with_frames(spark, sql, events=events).collect()))
     want = sorted(
         map(tuple, compile_chart_config(spark, cfg, sf_dir=sf_dir).collect())
     )
@@ -606,10 +606,10 @@ def test_builder_to_raw_sql_display_shapes(spark, sf_dir, events_source):
         convert_to_number_chart_config,
         convert_to_table_chart_config,
     )
-    from hyperdx_spark.io import register_tables
-    from hyperdx_spark.macros import replace_macros
+    from hyperdx_spark.io import load_table
+    from hyperdx_spark.macros import replace_macros, sql_with_frames
 
-    register_tables(spark, sf_dir, ("events",), time_filter=("ts", *RANGE))
+    events = load_table(spark, sf_dir, "events", time_filter=("ts", *RANGE))
     cfg = ChartConfig(
         source=events_source,
         select=[SelectCol(agg_fn="count")],
@@ -625,8 +625,8 @@ def test_builder_to_raw_sql_display_shapes(spark, sf_dir, events_source):
     # pie: seriesLimit -> LIMIT 2 + value-desc ordering
     tpl_pie = builder_to_raw_sql(cfg, display_type="pie")
     assert "LIMIT 2" in tpl_pie.sql and "`Value` DESC" in tpl_pie.sql
-    got = sorted(map(tuple, spark.sql(
-        replace_macros(tpl_pie.sql, date_range=RANGE, table="events")
+    got = sorted(map(tuple, sql_with_frames(
+        spark, replace_macros(tpl_pie.sql, date_range=RANGE, table="events"), events=events
     ).collect()))
     want = sorted(map(tuple, compile_chart_config(
         spark, convert_to_categorical_chart_config(cfg), sf_dir=sf_dir
@@ -642,8 +642,8 @@ def test_builder_to_raw_sql_display_shapes(spark, sf_dir, events_source):
     assert "LIMIT" not in builder_to_raw_sql(no_cap, display_type="pie").sql
     # number: groupBy dropped -> single row
     tpl_num = builder_to_raw_sql(cfg, display_type="number")
-    rows = spark.sql(
-        replace_macros(tpl_num.sql, date_range=RANGE, table="events")
+    rows = sql_with_frames(
+        spark, replace_macros(tpl_num.sql, date_range=RANGE, table="events"), events=events
     ).collect()
     assert len(rows) == 1
 

@@ -7,7 +7,7 @@ from datetime import datetime
 import pytest
 
 from hyperdx_spark import macros, metadata
-from hyperdx_spark.io import register_tables
+from hyperdx_spark.io import load_table
 
 RANGE = (datetime(2024, 1, 1), datetime(2024, 2, 1))
 
@@ -67,7 +67,6 @@ def test_macro_args_bracket_aware():
 
 
 def test_macro_runs_on_spark(spark, sf_dir):
-    register_tables(spark, sf_dir, ("events",))
     sql = macros.replace_macros(
         "SELECT $__timeInterval(ts) AS b, count(*) AS n FROM $__sourceTable"
         " WHERE $__timeFilter(ts) GROUP BY 1",
@@ -75,7 +74,8 @@ def test_macro_runs_on_spark(spark, sf_dir):
         interval_seconds=86400,
         table="events",
     )
-    rows = spark.sql(sql).collect()
+    events = load_table(spark, sf_dir, "events")
+    rows = macros.sql_with_frames(spark, sql, events=events).collect()
     assert len(rows) == 30 and sum(r["n"] for r in rows) == 1000
 
 

@@ -406,3 +406,49 @@ def test_app_mv_inference_utils():
         "avg", "avg_dur", ["Duration"], ["avg(Duration) AS avg_dur"]
     ) == "Duration"
     assert get_source_table_column("avg", "zzz", ["a"], []) is None
+
+
+def _daily_peak(date_range):
+    """An outer query the rollup can't answer over a CTE it can."""
+    inner = _cfg(
+        select=[SelectCol(agg_fn="sum", value_expression="value", alias="sum_v")],
+        date_range=date_range,
+    )
+    return ChartConfig(
+        source=Source(table="daily", timestamp_value_expression="__timestamp"),
+        ctes=[("daily", inner)],
+        select=[SelectCol(agg_fn="max", value_expression="sum_v", alias="peak_day")],
+        group_by=["event_type"],
+    )
+
+
+def test_cte_rewrite_leaves_the_catalog_unchanged(spark, sf_dir, mv):
+    before = sorted(t.name for t in spark.catalog.listTables())
+    df, _ = compile_with_mv(spark, _daily_peak(RANGE), [mv], sf_dir=sf_dir)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert df.count() > 0
+
+
+def test_same_named_cte_rewrites_compile_concurrently(spark, sf_dir, mv):
+    """Two threads rewrite a CTE of the same name onto the rollup over
+    different date ranges; each result must come from its own range."""
+    from hyperdx_spark.session import overlapped
+
+    ranges = [
+        (datetime(2024, 1, 1), datetime(2024, 1, 8)),
+        (datetime(2024, 1, 15), datetime(2024, 1, 31)),
+    ]
+    want = [
+        _rows(compile_chart_config(spark, _daily_peak(r), sf_dir=sf_dir)) for r in ranges
+    ]
+    assert want[0] != want[1]
+
+    def compile_loop(r):
+        return [
+            _rows(compile_with_mv(spark, _daily_peak(r), [mv], sf_dir=sf_dir)[0])
+            for _ in range(20)
+        ]
+
+    first, second = overlapped([lambda: compile_loop(ranges[0]), lambda: compile_loop(ranges[1])])
+    assert first == [want[0]] * 20
+    assert second == [want[1]] * 20

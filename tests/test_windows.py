@@ -3,6 +3,7 @@
 and equality of chunked vs unchunked execution."""
 
 import time
+from dataclasses import replace
 from datetime import datetime, timedelta
 
 from hyperdx_spark.compile import compile_chart_config
@@ -219,6 +220,62 @@ def test_chunked_series_limit_pinned(spark, sf_dir):
         == sorted(r["event_type"] for r in whole.select("event_type").distinct().collect())
     )
     assert chunked.count() == whole.count()
+
+
+def test_chunked_series_limit_leaves_the_catalog_unchanged(spark, sf_dir):
+    """The pinned set is semi-joined as a frame: nothing is registered, not
+    even while the chunks are being yielded."""
+    from hyperdx_spark.windows import chunked_chart
+
+    cfg = ChartConfig(
+        source=_src(),
+        select=[SelectCol(agg_fn="count", alias="cnt")],
+        granularity="1 day",
+        group_by=["event_type"],
+        series_limit=2,
+        date_range=RANGE,
+    )
+    before = sorted(t.name for t in spark.catalog.listTables())
+    chunks = chunked_chart(spark, cfg, sf_dir=sf_dir)
+    _, first = next(chunks)
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    chunks.close()
+    first.count()
+    run_chunked(spark, cfg, sf_dir=sf_dir).count()
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_chunked_pin_applies_before_chunk_limit(spark, sf_dir):
+    """A chunk's own ORDER BY and LIMIT apply after the pin, as after the
+    unchunked series-limit semi-join: each chunk holds more hourly rows of
+    the pinned group than the limit, so it must return the first three in
+    order."""
+    from hyperdx_spark.windows import chunked_chart
+
+    cfg = ChartConfig(
+        source=_src(),
+        select=[SelectCol(agg_fn="count", alias="cnt")],
+        granularity="1 hour",
+        group_by=["event_type"],
+        series_limit=1,
+        order_by="cnt DESC",
+        limit=3,
+        date_range=RANGE,
+    )
+    top = {r["event_type"] for r in compile_chart_config(
+        spark, replace(cfg, limit=None), sf_dir=sf_dir
+    ).collect()}
+    assert len(top) == 1
+    cut = 0
+    for w, df in chunked_chart(spark, cfg, sf_dir=sf_dir):
+        rows = df.collect()
+        one = replace(cfg, series_limit=None, where=f"event_type = '{next(iter(top))}'",
+                      where_language="sql", date_range=(w.start, w.end),
+                      date_range_end_inclusive=w.end_inclusive)
+        want = compile_chart_config(spark, one, sf_dir=sf_dir).collect()
+        assert [tuple(r) for r in rows] == [tuple(r) for r in want]
+        cut += compile_chart_config(spark, replace(one, limit=None), sf_dir=sf_dir).count() > 3
+    assert cut  # the limit, not the data, bounded at least one chunk
 
 
 def test_offset_pagination_complete_and_ordered(spark, sf_dir):
