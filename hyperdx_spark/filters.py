@@ -20,7 +20,7 @@ Divergences from the reference, by design:
   ClickHouse ``toString`` (same intent: compare Dynamic/JSON keys textually).
 
 The emitted conditions are ordinary :class:`hyperdx_spark.model.SqlFilter`
-rows, so they ride the existing WHERE assembly (`compile._where_clauses`) and
+rows, so they ride the existing WHERE assembly (`compile._where_sql`) and
 reach the parquet scan as pushed predicates — an IN-list over a partition or
 stats-indexed column prunes files/row-groups at 100 TB.
 """

@@ -576,7 +576,7 @@ def compile_with_mv(
         best = _smallest(winners).mv
         new_cfg = rewritten(cfg, best)
         mv_df = _mv_frame(spark, best, new_cfg.date_range)
-        return _compile(spark, new_cfg, None, mv_df, settings, {}), explanations
+        return _compile(spark, new_cfg, None, mv_df, settings), explanations
     return _compile(spark, cfg, sf_dir, df, settings, frames), explanations
 
 

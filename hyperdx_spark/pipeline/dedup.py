@@ -519,7 +519,7 @@ def winnow_pairs(
     storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> DataFrame:
     """Partial-copy candidate pairs via winnowing fingerprints
-    (text.winnow_fingerprints; Schleimer'03). Same inverted-index shape as
+    (text.winnow_fingerprint_rows; Schleimer'03). Same inverted-index shape as
     :func:`ngram_jaccard_pairs` — explode fingerprints, group postings,
     emit in-posting pairs, Jaccard over fingerprint SETS — but the
     fingerprints are character-level rolling-hash minima, so two documents
@@ -541,9 +541,8 @@ def winnow_pairs(
     """
     from hyperdx_spark.pipeline.text import winnow_fingerprint_rows
 
-    # rows form: gram hashes evaluate once per doc, window minima slide via
-    # a codegen'd frame aggregate (the Column form re-evaluates the gram
-    # array per window — see winnow_fingerprints' cost warning)
+    # gram hashes evaluate once per doc, window minima slide via a
+    # codegen'd frame aggregate
     fp = winnow_fingerprint_rows(
         df, text_col=text_col, id_col=id_col, k=k, w=w
     ).persist(storage_level)

@@ -211,51 +211,6 @@ def bpe_token_count(col: Column | str) -> Column:
     return F.size(bpe_pretokens(col))
 
 
-def winnow_fingerprints(
-    col: Column | str, *, k: int = 8, w: int = 16
-) -> Column:
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
-    SIGMOD'03 — the MOSS local document-fingerprinting algorithm).
-
-    Rolling k-gram hashes over the normalized text; from every window of
-    ``w`` consecutive gram hashes keep the minimum. Guarantee: any substring
-    match of length >= w + k - 1 between two documents contributes at least
-    one SHARED fingerprint — so fingerprint-set overlap detects partial
-    copies (quote/boilerplate reuse) that whole-document hashing misses and
-    word-shingle Jaccard under-weights.
-
-    Hashes are the md5-prefix 60-bit integers used across the pipeline
-    (`sampling.py` keys) — bit-identical in DuckDB, so winnow joins stay
-    inside the oracle gate. Returns a sorted distinct array<long>; empty
-    array for empty/whitespace-only text.
-
-    COST WARNING — single-expression form, small inputs only: Catalyst
-    inlines the captured gram-hash array into the window lambda and
-    interpreted HOFs do no common-subexpression elimination, so the k-gram
-    hashes are re-evaluated once PER WINDOW — O(len^2) md5 calls (measured
-    ~2 s for a 300-char doc). Corpus pipelines must use
-    :func:`winnow_fingerprint_rows`, which evaluates the grams once and
-    slides the window with a codegen'd frame aggregate (~1000x).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    norm = F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
-    n = F.length(norm)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
-        lambda i: F.conv(
-            F.substring(F.md5(F.substring(norm, i, k)), 1, 15), 16, 10
-        ).cast("long"),
-    )
-    m = F.size(grams)
-    wins = F.transform(
-        F.sequence(F.lit(1), F.greatest(m - F.lit(w - 1), F.lit(1))),
-        lambda j: F.array_min(F.slice(grams, j, F.least(F.lit(w), m))),
-    )
-    return F.when(n > 0, F.array_sort(F.array_distinct(wins))).otherwise(
-        F.array().cast("array<long>")
-    )
-
-
 # common entities worth decoding without an HTML parser dependency.
 # ORDER MATTERS: '&amp;' must decode LAST or doubly-escaped markup like
 # '&amp;lt;' would double-decode ('&amp;lt;' -> '&lt;' -> '<'), corrupting
@@ -607,8 +562,18 @@ def winnow_fingerprint_rows(
     k: int = 8,
     w: int = 16,
 ) -> DataFrame:
-    """(id, f) winnowing fingerprint rows — the corpus-scale form of
-    :func:`winnow_fingerprints` (same selected hashes, same DuckDB replay).
+    """(id, f) winnowing fingerprint rows (Schleimer, Wilkerson & Aiken,
+    SIGMOD'03 — the MOSS local document-fingerprinting algorithm).
+
+    Rolling k-gram hashes over the normalized text (lower, trim, whitespace
+    runs collapsed); from every window of ``w`` consecutive gram hashes keep
+    the minimum. Guarantee: any substring match of length >= w + k - 1
+    between two documents contributes at least one SHARED fingerprint — so
+    fingerprint-set overlap detects partial copies (quote/boilerplate reuse)
+    that whole-document hashing misses and word-shingle Jaccard
+    under-weights. Hashes are the md5-prefix 60-bit integers used across the
+    pipeline (`sampling.py` keys) — bit-identical in DuckDB, so winnow joins
+    stay inside the oracle gate. Empty/whitespace-only text yields no rows.
 
     Plan shape: one projection evaluates the k-gram md5 hashes ONCE per
     document (``posexplode`` of the gram array), then the w-window minimum
@@ -617,8 +582,9 @@ def winnow_fingerprint_rows(
     window starts beyond ``max(m-w+1, 1)`` are dropped. Everything after
     the explode is whole-stage codegen; the per-document shuffle+sort
     partitions by id, so documents process independently at any corpus
-    size. ~1000x the single-expression Column form (which re-evaluates the
-    gram array per window — see its docstring).
+    size. (A single-expression Column form re-evaluates the gram array per
+    window — O(len^2) md5 calls — because interpreted HOFs get no common
+    subexpression elimination.)
     """
     from pyspark.sql import Window
 

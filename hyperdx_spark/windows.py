@@ -158,7 +158,7 @@ def _pin_series_limit(
     from hyperdx_spark.compile import compile_chart_config
     from hyperdx_spark.display import has_positive_series_limit
 
-    # same gates as compile._apply_series_limit (renderSeriesLimitCte):
+    # same gates as compile.render_chart_sql's series limit (renderSeriesLimitCte):
     # positive integer, group-by, granularity, group columns in the output
     if (
         not has_positive_series_limit(cfg.series_limit)
@@ -206,7 +206,9 @@ def chunked_chart(
             date_range_end_inclusive=w.end_inclusive,
             fill_nulls=None,  # spine is per-chunk; fill at merge time instead
         )
-        yield w, _compile(spark, sub, sf_dir, None, settings or DEFAULT_SETTINGS, {}, pin)
+        yield w, _compile(
+            spark, sub, sf_dir, None, settings or DEFAULT_SETTINGS, series_pin=pin
+        )
 
 
 def run_chunked(

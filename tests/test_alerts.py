@@ -136,7 +136,9 @@ def test_threshold_matrix_reference_twin():
 
 def test_threshold_matrix_column_variant_agrees(spark):
     """threshold_column (the distributed predicate) must decide every
-    matrix case identically to the scalar path."""
+    matrix case identically to the scalar path. One frame holds every
+    matrix value and one select carries one predicate column per config,
+    so the whole matrix is one Spark job."""
     from collections import defaultdict
 
     from pyspark.sql import functions as F
@@ -146,16 +148,21 @@ def test_threshold_matrix_column_variant_agrees(spark):
     by_cfg = defaultdict(list)
     for tt, t, tmax, v, want in _THRESHOLD_MATRIX:
         by_cfg[(tt, t, tmax)].append((float(v), want))
-    for (tt, t, tmax), cases in by_cfg.items():
-        c = AlertConfig(threshold=t, threshold_type=tt, threshold_max=tmax)
-        got = {
-            r["v"]: r["hit"]
-            for r in spark.createDataFrame(
-                [(v,) for v, _ in cases], "v double"
-            ).select("v", threshold_column(c, F.col("v")).alias("hit")).collect()
-        }
+    values = sorted({v for cases in by_cfg.values() for v, _ in cases})
+    hits = spark.createDataFrame([(v,) for v in values], "v double").select(
+        "v",
+        *(
+            threshold_column(
+                AlertConfig(threshold=t, threshold_type=tt, threshold_max=tmax),
+                F.col("v"),
+            ).alias(f"c{i}")
+            for i, (tt, t, tmax) in enumerate(by_cfg)
+        ),
+    )
+    got = {r["v"]: r for r in hits.collect()}
+    for i, ((tt, t, tmax), cases) in enumerate(by_cfg.items()):
         for v, want in cases:
-            assert got[v] is want, (tt, t, tmax, v)
+            assert got[v][f"c{i}"] is want, (tt, t, tmax, v)
 
 
 def test_threshold_max_required_message():

@@ -1197,7 +1197,118 @@ def test_optimized_ts_expression_feeds_multi_column_filter(spark, sf_dir):
     )
     assert opt == "ts, toStartOfHour(ts)"
     ev = load_table(spark, sf_dir, "events")
-    bucket, all_exprs = pick_bucket_timestamp_expr(opt, ev)
+    bucket, all_exprs = pick_bucket_timestamp_expr(opt, ev.schema)
     assert bucket == "ts"
     assert len(all_exprs) == 2 and any("date_trunc" in e or "toStartOfHour" in e
                                        or "hour" in e.lower() for e in all_exprs)
+
+
+# ---- one lowering: a compile is one rendered statement ----------------------
+
+
+def _probe_configs(src):
+    """The three dashboard-style configs the lowering is pinned on."""
+    cnt = SelectCol(agg_fn="count", alias="cnt")
+    return {
+        "lucene_5m": ChartConfig(
+            source=src, select=[cnt], where="error", where_language="lucene",
+            granularity="5 minute", group_by=["event_type"], date_range=RANGE,
+        ),
+        "count_avg_1d": ChartConfig(
+            source=src,
+            select=[cnt, SelectCol(agg_fn="avg", value_expression="value", alias="a")],
+            granularity="1 day", date_range=RANGE,
+        ),
+        "series_limit_2": ChartConfig(
+            source=src, select=[cnt], granularity="1 day", group_by=["event_type"],
+            series_limit=2, date_range=RANGE,
+        ),
+    }
+
+
+class _RoundTrips:
+    """Counts py4j round trips the way perfbench/tracer.py does (one
+    ``send_command`` per trip, proxy releases from Python's GC excluded)
+    and ``SparkSession.sql`` calls, while the block runs."""
+
+    def __init__(self, spark):
+        self.spark, self.py4j, self.sql = spark, 0, 0
+
+    def __enter__(self):
+        from py4j import clientserver, java_gateway
+
+        self._saved = []
+        for cls in (clientserver.ClientServerConnection, java_gateway.GatewayConnection):
+            orig = cls.send_command
+
+            def send_command(conn, command, *a, __orig=orig, **k):
+                if not command.startswith("m\nd\n"):
+                    self.py4j += 1
+                return __orig(conn, command, *a, **k)
+
+            self._saved.append((cls, "send_command", orig))
+            cls.send_command = send_command
+        session_cls = type(self.spark)
+        orig_sql = session_cls.sql
+
+        def sql(session, *a, **k):
+            self.sql += 1
+            return orig_sql(session, *a, **k)
+
+        self._saved.append((session_cls, "sql", orig_sql))
+        session_cls.sql = sql
+        return self
+
+    def __exit__(self, *exc):
+        for cls, attr, orig in reversed(self._saved):
+            setattr(cls, attr, orig)
+
+
+@pytest.mark.parametrize("name", ["lucene_5m", "count_avg_1d", "series_limit_2"])
+def test_compile_is_one_statement_with_few_round_trips(spark, sf_dir, events_source, name):
+    """A warm build renders one statement and runs it with one spark.sql
+    call: at most 15 py4j round trips (the Column-building lowering made
+    72/77/152 for these three configs)."""
+    cfg = _probe_configs(events_source)[name]
+    compile_chart_config(spark, cfg, sf_dir=sf_dir)  # warm the load_table memo
+    with _RoundTrips(spark) as trips:
+        df = compile_chart_config(spark, cfg, sf_dir=sf_dir)
+    assert trips.sql == 1, trips.sql
+    assert trips.py4j <= 15, trips.py4j
+    assert df.count() > 0
+
+
+def test_compiled_date_range_keeps_driver_local_instants(spark, sf_dir, events_source):
+    """A naive date-range bound means the instant F.lit(bound) means — read
+    in the driver's local time zone — also when the driver is not on UTC."""
+    import os
+    import time
+    from datetime import timezone
+
+    from pyspark.sql import functions as F
+
+    from hyperdx_spark.io import load_table
+
+    start, end = datetime(2024, 1, 3, 7, 30), datetime(2024, 1, 9, 2, 15)
+    cfg = ChartConfig(
+        source=events_source, select=[SelectCol(agg_fn="count", alias="cnt")],
+        date_range=(start, end),
+    )
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        got = compile_chart_config(spark, cfg, sf_dir=sf_dir).collect()[0]["cnt"]
+        ev = load_table(spark, sf_dir, "events", time_filter=("ts", start, end))
+        ts = F.col("ts")
+        want = ev.where((ts >= F.lit(start)) & (ts <= F.lit(end))).count()
+        utc = [d.replace(tzinfo=timezone.utc) for d in (start, end)]
+        as_utc = ev.where((ts >= F.lit(utc[0])) & (ts <= F.lit(utc[1]))).count()
+    finally:
+        if saved is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+    assert got == want
+    assert want != as_utc  # the range cuts the data where the zones differ

@@ -2,6 +2,9 @@
 similarity search, multimodal plumbing. DuckDB oracles where the operation is
 SQL-portable; property/golden tests otherwise."""
 
+import hashlib
+import re
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -703,35 +706,57 @@ def test_bpe_token_count_vs_python_reference(spark, sf_dir):
     assert ws.select(T.bpe_token_count("text").alias("n")).collect()[0]["n"] == 3
 
 
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _winnow_reference(text: str, k: int = 8, w: int = 16) -> list[int]:
+    """Plain-Python winnowing fingerprints (Schleimer'03), the spec the
+    rows form is held to: the engine's normalization (lower, trim spaces,
+    collapse Java ``\\s`` runs to one space), the md5 60-bit prefix of every
+    k-gram (one gram when the text is shorter than k), the minimum of every
+    w-window of grams (one window when there are fewer than w), sorted
+    distinct. Empty text has no fingerprints."""
+    norm = _JAVA_WS.sub(" ", text.lower().strip(" "))
+    if not norm:
+        return []
+    grams = [
+        int(hashlib.md5(norm[i : i + k].encode("utf-8")).hexdigest()[:15], 16)
+        for i in range(max(len(norm) - k + 1, 1))
+    ]
+    m = len(grams)
+    return sorted({min(grams[j : j + min(w, m)]) for j in range(max(m - w + 1, 1))})
+
+
+def _winnow_rows(df, **kw) -> dict:
+    """{doc id: sorted distinct fingerprints} from the engine's rows form."""
+    return {
+        r["id"]: list(r["f"])
+        for r in text.winnow_fingerprint_rows(df, **kw)
+        .groupBy("id").agg(F.sort_array(F.collect_set("f")).alias("f"))
+        .collect()
+    }
+
+
 def test_winnow_fingerprints_guarantee(spark):
     """Winnowing guarantee (Schleimer'03 thm): documents sharing a substring
     of length >= w + k - 1 share at least one fingerprint."""
-    from hyperdx_spark.pipeline import text as T
-
     k, w = 8, 16
     shared = "x" * 0 + "this exact sentence is long enough to be guaranteed"
     assert len(shared) >= w + k - 1
-    df = spark.createDataFrame(
-        [
-            (1, "prefix alpha " + shared + " suffix one"),
-            (2, "totally different start " + shared + " and another ending"),
-            (3, "no overlap with anything else at all, none whatsoever"),
-        ],
-        "doc_id long, text string",
-    )
-    fps = {
-        r["doc_id"]: set(r["f"])
-        for r in df.select(
-            "doc_id", T.winnow_fingerprints("text", k=k, w=w).alias("f")
-        ).collect()
-    }
+    docs = [
+        (1, "prefix alpha " + shared + " suffix one"),
+        (2, "totally different start " + shared + " and another ending"),
+        (3, "no overlap with anything else at all, none whatsoever"),
+    ]
+    ref = {d: _winnow_reference(t, k=k, w=w) for d, t in docs}
+    fps = {d: set(f) for d, f in ref.items()}
     assert fps[1] & fps[2], "shared substring must share a fingerprint"
     assert not (fps[1] & fps[3] or fps[2] & fps[3])
     # deterministic: sorted distinct
-    one = df.where("doc_id = 1").select(
-        T.winnow_fingerprints("text", k=k, w=w).alias("f")
-    ).collect()[0]["f"]
-    assert one == sorted(set(one))
+    assert ref[1] == sorted(set(ref[1]))
+    # the engine's rows form selects exactly these fingerprints
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    assert _winnow_rows(df, k=k, w=w) == ref
 
 
 def test_winnow_pairs_partial_copy(spark):
@@ -752,34 +777,20 @@ def test_winnow_pairs_partial_copy(spark):
     assert dedup.winnow_pairs(df, threshold=0.05, max_fp_df=1).count() == 0
 
 
-def test_winnow_rows_form_matches_column_form(spark, sf_dir):
+def test_winnow_rows_form_matches_reference(spark, sf_dir):
     """The corpus-scale rows form (posexplode + frame-aggregate sliding min)
-    must select exactly the fingerprints of the single-expression Column
-    form, which is the spec (and what the DuckDB oracle replays)."""
-    from pyspark.sql import functions as F
-
+    must select exactly the fingerprints of the plain-Python reference,
+    which is the spec (and what the DuckDB oracle replays)."""
     from hyperdx_spark.io import load_table
-    from hyperdx_spark.pipeline import text as T
 
-    docs = load_table(spark, sf_dir, "documents").limit(40)
-    col_form = {
-        r["doc_id"]: list(r["f"])
-        for r in docs.select(
-            "doc_id", T.winnow_fingerprints("text").alias("f")
-        ).collect()
-    }
-    rows_form = {
-        r["id"]: list(r["f"])
-        for r in T.winnow_fingerprint_rows(docs)
-        .groupBy("id").agg(F.sort_array(F.collect_set("f")).alias("f"))
-        .collect()
-    }
+    sample = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(40)
+    docs = spark.createDataFrame(sample.collect(), sample.schema)
+    ref = {r["doc_id"]: _winnow_reference(r["text"]) for r in docs.collect()}
+    rows_form = _winnow_rows(docs)
     # rows form omits empty-text docs entirely; otherwise identical
-    assert set(col_form) - set(rows_form) == {
-        d for d, f in col_form.items() if not f
-    }
+    assert set(ref) - set(rows_form) == {d for d, f in ref.items() if not f}
     for d, f in rows_form.items():
-        assert f == col_form[d]
+        assert f == ref[d]
 
 
 def test_gopher_and_c4_filters_vs_python_reference(spark, sf_dir):
