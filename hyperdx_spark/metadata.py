@@ -48,6 +48,14 @@ def get_all_fields(df: DataFrame) -> list[tuple[str, str]]:
 
 
 def _capped(df: DataFrame, max_rows: Optional[int]) -> DataFrame:
+    """The first *max_rows* rows of *df* (all of them when unset).
+
+    Each call compiles new Java even when the query is warm: Spark names a
+    codegen'd limit's row counter from one sequence for the whole JVM
+    (``_limit_counter_N``), so no two limit plans share generated source
+    and the class cache never hits. At sf0.01 these limits make all of the
+    12-14 Janino compiles of a warm ``q_metadata`` run. The counter's name
+    is Spark's to choose, and the cap bounds the scan, so it stays."""
     return df.limit(max_rows) if max_rows else df
 
 

@@ -15,6 +15,20 @@ local[32]):
   every row built on the driver back into Spark: :func:`local_frame` ships
   them as one Arrow table that Spark plans as a ``LocalTableScan``, with no
   Python-worker RDD.
+* Codegen: dashboards re-run the same queries on every refresh, so a warm
+  query should compile no Java. Spark caches generated classes by source in
+  one JVM-wide LRU of 100 entries by default. The six dashboard tiles alone
+  compile 92-100 classes cold at sf0.01, so the cache thrashed: each warm
+  pass over them compiled ~50 classes again with Janino, and the JIT then
+  compiled each new class again. ``get_spark`` sizes the cache to 4,096: the
+  49 gate entries compile ~1,750 distinct classes at sf0.01, and keeping
+  them costs ~12 MB of Metaspace (204 -> 216 MB after two gate passes).
+  Class names drop the whole-stage stage id (``useIdInClassName=false``),
+  which differs from run to run for the same pipeline, so a pipeline keeps
+  its source, the cache key, from run to run. The cost: stack traces name
+  ``GeneratedIterator`` without saying which codegen stage it is. A session
+  the engine receives keeps its own cache size and gets only the class-name
+  conf.
 """
 
 from __future__ import annotations
@@ -47,7 +61,16 @@ RUNTIME_CONFS = {
     # coercions itself (try_cast + coalesce); ANSI runtime errors on bad
     # casts would break that contract.
     "spark.sql.ansi.enabled": "false",
+    # Generated classes are cached by their source. The whole-stage codegen
+    # stage id differs from run to run for the same pipeline and is part of
+    # the class name; left out, a warm query finds the code it compiled
+    # before.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+# Spark's generated-class cache (static ``spark.sql.codegen.cache.maxEntries``,
+# default 100); sized in the scale notes above.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
@@ -93,6 +116,7 @@ def get_spark(app_name: str = "hyperdx_spark", cpus: int | None = None) -> Spark
         # latency.  Scale-independent: this is per-API-call driver
         # overhead, identical on a 1000-node cluster.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Split size trades scheduling overhead against parallelism. On a
         # 1000-executor cluster reading 100 TB the Spark default (128 MB ->
         # ~800k tasks) is right, and a deployment would leave it alone. This

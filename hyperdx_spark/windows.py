@@ -38,8 +38,8 @@ from hyperdx_spark.model import ChartConfig
 from hyperdx_spark.session import local_frame, overlapped
 
 ONE_MIN_WINDOW = 60
-# How many windows ahead offset_paginated_search keeps in flight (compile +
-# first-page job): the only bound on its prefetch.
+# How many windows ahead a DESC offset_paginated_search drain keeps in flight
+# (compile + first-page job): the only bound on its prefetch.
 _WINDOW_PREFETCH = 3
 
 DEFAULT_TIME_WINDOWS_SECONDS = (
@@ -361,10 +361,12 @@ def offset_paginated_search(
     ordering in *direction* (DESC unless specified); an explicit ordering
     drives the window direction (``isFirstOrderByAscending``).
 
-    The compile and first page of up to ``_WINDOW_PREFETCH`` windows ahead
-    are read before the consumer reaches them, so on a source that is being
-    appended to those first pages are earlier snapshots than a serial drain
-    would read. Closing the iterator cancels their Spark jobs."""
+    A DESC drain reads the compile and first page of up to
+    ``_WINDOW_PREFETCH`` windows before the consumer reaches them; closing
+    the iterator cancels their Spark jobs. An ASC (live-tail) drain reads
+    each window only once the previous one is consumed: its later windows
+    are the newest data of a source that may still be appended to, and a
+    prefetched first page would be an earlier snapshot of it."""
     from hyperdx_spark.compile import compile_chart_config
 
     assert cfg.date_range is not None, "offset pagination requires a date range"
@@ -410,11 +412,15 @@ def offset_paginated_search(
         base_df = compile_chart_config(spark, sub, sf_dir=sf_dir)
         return base_df, base_df.limit(page_size).collect()
 
-    # Compile + page 0 of the next windows overlap the consumer's paging;
-    # pages within a window stay sequential, and yield order is unchanged.
-    firsts = overlapped(
-        (partial(_first_page, w) for w in windows), ahead=_WINDOW_PREFETCH
-    )
+    # DESC: compile + page 0 of the next windows overlap the consumer's
+    # paging; pages within a window stay sequential, and yield order is
+    # unchanged.
+    if direction == "DESC":
+        firsts = overlapped(
+            (partial(_first_page, w) for w in windows), ahead=_WINDOW_PREFETCH
+        )
+    else:
+        firsts = (_first_page(w) for w in windows)
     with closing(firsts):
         for base_df, rows in firsts:
             if rows:

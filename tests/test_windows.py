@@ -502,3 +502,36 @@ def test_offset_pagination_prefetch_error_propagates(spark, sf_dir):
     )
     with pytest.raises(Exception):
         list(offset_paginated_search(spark, bad, sf_dir=sf_dir, page_size=50))
+
+
+def test_live_tail_drain_reads_each_window_after_the_last_is_consumed(
+    spark, sf_dir, monkeypatch
+):
+    """An ASC (live-tail) drain prefetches nothing: window k+1 is compiled
+    only once every page of window k has been consumed, so each window is
+    read when the consumer reaches it, not as an earlier snapshot."""
+    import hyperdx_spark.compile as compile_mod
+
+    consumed = []  # pages the consumer has taken, in order
+    compiled = []  # (window start, pages consumed when its compile began)
+    real = compile_mod.compile_chart_config
+
+    def spy(spark, cfg, **kw):
+        compiled.append((cfg.date_range[0], len(consumed)))
+        return real(spark, cfg, **kw)
+
+    monkeypatch.setattr(compile_mod, "compile_chart_config", spy)
+    cfg = ChartConfig(
+        source=_src(),
+        select="event_id, ts",
+        order_by="ts ASC",
+        date_range=(datetime(2024, 1, 1), datetime(2024, 1, 2)),
+    )
+    for page in offset_paginated_search(spark, cfg, sf_dir=sf_dir, page_size=2):
+        consumed.append(page)
+    assert len(compiled) == len(generate_time_windows_ascending(*cfg.date_range))
+    # the windows hold several pages each, so a prefetch would show
+    assert len(consumed) > 2 * len(compiled)
+    for start, n_consumed in compiled:
+        earlier = sum(1 for page in consumed if page[0]["ts"] < start)
+        assert n_consumed == earlier, start
