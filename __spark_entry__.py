@@ -33,7 +33,7 @@ from hyperdx_spark.model import (
     SqlAstFilter,
     SqlFilter,
 )
-from hyperdx_spark.session import local_frame, overlapped, tune_session
+from hyperdx_spark.session import local_frame, overlapped, scoped, scratch_table, tempdir, tune_session
 from hyperdx_spark import metrics
 from hyperdx_spark.pipeline import dedup, multimodal, similarity, text
 from hyperdx_spark.post import compute_ratio, format_time_chart, previous_period
@@ -728,16 +728,15 @@ FROM c ORDER BY count DESC, value LIMIT 10
 # §4 MV rollup rewrite — hourly rollup answers a daily chart (mv.py)
 # --------------------------------------------------------------------------
 
+@scoped
 def q_mv_rollup(spark, sf_dir):
     """Build an hourly rollup of events, then answer a daily chart from it
     via the MV rewrite (materializedViews.ts parity). The oracle computes
     the same answer from the raw table — results must be identical."""
-    import tempfile
-
     from hyperdx_spark.mv import AggregatedColumn, MVConfig, compile_with_mv
 
     mv = MVConfig(
-        path=os.path.join(tempfile.mkdtemp(prefix="hdx_mv_"), "events_hourly"),
+        path=os.path.join(tempdir("hdx_mv_"), "events_hourly"),
         dimension_columns=["event_type"],
         min_granularity="1 hour",
         timestamp_column="bucket_ts",
@@ -780,16 +779,15 @@ FROM events WHERE {TIME_WHERE} GROUP BY 1, 2
 # Structured Streaming live tail -> watermarked windowed agg (streaming/)
 # --------------------------------------------------------------------------
 
+@scoped
 def q_stream_tail(spark, sf_dir):
     """Live-tail pipeline run to completion with Trigger.AvailableNow: seed
     an ingest dir with two days of events, stream 6-hour windowed counts
     with a 1-hour watermark, return the day-1 buckets (all closed by the
     final watermark, so the emitted set is deterministic)."""
-    import tempfile
-
     from hyperdx_spark.streaming import live_tail, windowed_agg
 
-    seed = tempfile.mkdtemp(prefix="hdx_ingest_")
+    seed = tempdir("hdx_ingest_")
     ev = load_table(spark, sf_dir, "events").where(
         (F.col("ts") >= F.lit(datetime(2024, 1, 1)))
         & (F.col("ts") < F.lit(datetime(2024, 1, 3)))
@@ -1453,6 +1451,7 @@ FROM okpay
 """
 
 
+@scoped
 def q_stream_notify(spark, sf_dir):
     """The streaming alert→notify composition under the gate (VERDICT r12
     task #6): the reference's cron loop (checkAlerts/index.ts:1110-1420)
@@ -1468,7 +1467,6 @@ def q_stream_notify(spark, sf_dir):
     watermark so every real daily bucket closes and emits; the sentinel's
     own bucket never closes and is never evaluated."""
     import hashlib
-    import tempfile
     from datetime import timedelta
 
     from hyperdx_spark import alerts, webhooks
@@ -1478,7 +1476,7 @@ def q_stream_notify(spark, sf_dir):
         windowed_agg,
     )
 
-    seed = tempfile.mkdtemp(prefix="hdx_ntfy_seed_")
+    seed = tempdir("hdx_ntfy_seed_")
     ev = (
         load_table(spark, sf_dir, "events")
         .where(F.col("event_type") == "error")
@@ -2787,13 +2785,12 @@ GROUP BY 1
 # §2.1 export: CSV round-trip (write single-file, read back typed)
 # --------------------------------------------------------------------------
 
+@scoped
 def q_csv_export(spark, sf_dir):
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events", time_filter=("ts", *RANGE))
     day_s = ((F.unix_timestamp("ts") / 86400).cast("long") * 86400).alias("day_s")
     agg = ev.groupBy(day_s, "event_type").agg(F.count("*").alias("cnt"))
-    path = os.path.join(tempfile.gettempdir(), "hyperdx_csv_export.csv")
+    path = os.path.join(tempdir("hdx_csv_"), "export.csv")
     export_csv(agg, path, single_file=True)
     return spark.read.schema("day_s BIGINT, event_type STRING, cnt BIGINT").option(
         "header", "true"
@@ -2933,13 +2930,12 @@ FROM events WHERE {TIME_WHERE}
 ORDER BY event_id LIMIT 100
 """
 
+@scoped
 def q_otlp_ingest(spark, sf_dir):
     """Ingest sink round-trip (§2.1 sink): events rendered as OTLP/JSON
     lines, streamed through parse_otlp_logs -> date-partitioned parquet,
     then aggregated from the written table. Must equal aggregating the
     source rows directly."""
-    import tempfile
-
     from hyperdx_spark.streaming.ingest import (
         parse_otlp_logs,
         read_otlp_stream,
@@ -2975,7 +2971,7 @@ def q_otlp_ingest(spark, sf_dir):
             ).alias("resourceLogs")
         )
     )
-    base = tempfile.mkdtemp(prefix="hdx_otlp_")
+    base = tempdir("hdx_otlp_")
     src_dir, out_dir, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
     ev.select(line.alias("value")).write.mode("overwrite").text(src_dir)
     parsed = parse_otlp_logs(read_otlp_stream(spark, src_dir))
@@ -3073,17 +3069,16 @@ FROM (
 """
 
 
+@scoped
 def q_mv_quantile(spark, sf_dir):
     """Quantile answered FROM the rollup: the hourly MV carries a
     fixed-precision histogram state (map<quantized value, count>,
     scale=100); the daily p90 is a type-7 weighted quantile over the merged
     state — no base-table scan (materializedViews.ts:225-275 parity)."""
-    import tempfile
-
     from hyperdx_spark.mv import AggregatedColumn, MVConfig, compile_with_mv, write_rollup
 
     mv = MVConfig(
-        path=os.path.join(tempfile.mkdtemp(prefix="hdx_mvq_"), "events_hourly"),
+        path=os.path.join(tempdir("hdx_mvq_"), "events_hourly"),
         dimension_columns=["event_type"],
         min_granularity="1 hour",
         timestamp_column="bucket_ts",
@@ -3301,14 +3296,13 @@ SELECT * FROM s SEMI JOIN act USING (sessionId)
 # §2.2 materialized-column substitution (fastifySQL analogue)
 # --------------------------------------------------------------------------
 
+@scoped
 def q_materialized_col(spark, sf_dir):
     """`props.k` accessor rewritten to a pre-materialized physical column
     (renderChartConfig.ts:209-341): the JSON blob is never read — the scan
     touches only (ts, mat_k). Results must equal the JSON-probe semantics."""
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events")
-    tmp = os.path.join(tempfile.gettempdir(), "hyperdx_mat")
+    tmp = tempdir("hdx_mat_")
     ev.withColumn("mat_k", F.get_json_object("props", "$.k")).write.mode(
         "overwrite"
     ).parquet(os.path.join(tmp, "events_mat.parquet"))
@@ -3634,6 +3628,7 @@ SELECT 'quantile' AS part, __timestamp, '' AS event_type, p AS v FROM ({O_EXP_HI
 """
 
 
+@scoped
 def q_promql_features(spark, sf_dir):
     """PromQL modifier/function coverage: histogram_quantile, offset, absent,
     plus the aggregation-operator family (promql.py Agg eval): `without`,
@@ -3915,6 +3910,7 @@ SELECT part, __timestamp, event_type, value FROM (
 """
 
 
+@scoped
 def q_promql_vecmatch(spark, sf_dir):
     """PromQL vector matching (promql.py:_vector_binop): per-(event_type,
     umod) share of the event_type total — the `/ on(...) group_left` idiom
@@ -4033,6 +4029,7 @@ SELECT *, 'filtered' AS part FROM ({O_SESSION_FILTERED})
 """
 
 
+@scoped
 def q_mv_rollups(spark, sf_dir):
     """§4 MV rewrite: basic agg states + quantile state, both answered from
     the rollup (materializedViews.ts parity)."""
@@ -4058,6 +4055,7 @@ SELECT 'quantile' AS part, __timestamp, event_type, cnt::DOUBLE AS cnt,
 """
 
 
+@scoped
 def q_neardup_pairs(spark, sf_dir):
     """Near-dup family: n-gram Jaccard, MinHash+LSH (same ground truth), and
     SimHash pigeonhole blocking — one pairs relation, tagged by method."""
@@ -4117,6 +4115,7 @@ FROM reach GROUP BY id
 """
 
 
+@scoped
 def q_ann_indexed(spark, sf_dir):
     """ANN tiers over the same queries: brute-force (exact), LSH bands, IVF
     lists (nprobe=nlist -> provably exact), PQ asymmetric-distance with
@@ -4129,7 +4128,6 @@ def q_ann_indexed(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 3)
     from hyperdx_spark.pipeline import clustering as _clu
-    import tempfile
 
     # The eager chains below are independent strings of small collects
     # (19.2 s of 20.7 s construction was py4j wait): overlap them.
@@ -4139,7 +4137,7 @@ def q_ann_indexed(spark, sf_dir):
         # temp dir, query with nprobe=nlist + refine >= |corpus| ->
         # provably exact, while exercising the full path (partitioned
         # write, pruned scan, ADC over codes, re-rank)
-        ivfpq_path = tempfile.mkdtemp(prefix="ivfpq_") + "/idx"
+        ivfpq_path = tempdir("ivfpq_") + "/idx"
         similarity.build_ivfpq_index(emb, ivfpq_path, nlist=8, m=8, codes=16)
         return similarity.query_ivfpq_index(
             spark, ivfpq_path, qs, k=5, nprobe=8, refine=100_000_000
@@ -4350,6 +4348,7 @@ GROUP BY i
 """
 
 
+@scoped
 def q_csv_render(spark, sf_dir):
     """§2.1 CSV export round-trip + §2.11 client render cap (top-by-peak)
     + the display-shape config conversions (core/utils.ts:811-900): a
@@ -4511,6 +4510,7 @@ FROM g GROUP BY user_id, sid
 """
 
 
+@scoped
 def q_dedup_all(spark, sf_dir):
     """Dedup family + deterministic-sampling tier, part-tagged: exact dedup
     (normalized-hash groupBy), connected-components clustering of near-dup
@@ -4712,8 +4712,8 @@ def q_dedup_all(spark, sf_dir):
     # tokenizer. storeprobe: incremental exact-dedup classification of a
     # 1-in-10 batch against a store seeded from the other 9/10
     # (fingerprint = md5 of normalized text, so DuckDB replays the whole
-    # classification; localCheckpoint decouples the returned frame from
-    # the managed table so later overwrites can't invalidate it).
+    # classification). The store is a table of this call's own, dropped
+    # when the result is released.
     from hyperdx_spark.pipeline import incremental as _inc
     from hyperdx_spark.pipeline import packing as _packing
 
@@ -4731,17 +4731,9 @@ def q_dedup_all(spark, sf_dir):
         .cast("long").alias("v1"),
         F.col("seq_off").cast("long").alias("v2"),
     )
-    # a previous session may have left the managed-table directory behind
-    # without a catalog entry (fresh derby per session) — clear both
-    import os as _os
-    import shutil as _shutil
-
-    spark.sql("DROP TABLE IF EXISTS gate_inc_store")
-    _wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    _wh = _wh[len("file:"):] if _wh.startswith("file:") else _wh
-    _shutil.rmtree(_os.path.join(_wh, "gate_inc_store"), ignore_errors=True)
+    store = scratch_table(spark, "gate_inc_store")
     _inc.build_exact_store(
-        docs.where(F.col("doc_id") % 10 != 0), "gate_inc_store", buckets=8
+        docs.where(F.col("doc_id") % 10 != 0), store, buckets=8
     )
     stat_code = (
         F.when(F.col("status") == "store_dup", 2)
@@ -4749,13 +4741,13 @@ def q_dedup_all(spark, sf_dir):
         .otherwise(0)
     )
     storeprobe = _inc.dedup_exact_against_store(
-        docs.where(F.col("doc_id") % 10 == 0), spark, "gate_inc_store"
+        docs.where(F.col("doc_id") % 10 == 0), spark, store
     ).select(
         F.lit("storeprobe").alias("part"),
         F.col("doc_id").cast("string").alias("k"),
         stat_code.cast("long").alias("v1"),
         F.coalesce(F.col("dup_of"), F.lit(-1)).cast("long").alias("v2"),
-    ).localCheckpoint()
+    )
     # URL curation (r9): synthesized crawl URLs where (host, page, id
     # param) repeat under varying tracking params / fragments — urldedup
     # pins the canonicalization (v1 = canonical length) + min-id keeper,
@@ -4997,6 +4989,7 @@ SELECT 'sampled', '', ct, bt, 0.0, 0.0, '' FROM tot
 """
 
 
+@scoped
 def q_trace_waterfall(spark, sf_dir):
     """Trace waterfall + breakdown under the gate (mcp/tools/trace/
     waterfall.ts + breakdown.ts): a deterministic span forest is derived
@@ -5013,8 +5006,6 @@ def q_trace_waterfall(spark, sf_dir):
       parent traces -> semi join -> (service, operation) aggregate with
       parent rows excluded), one row per metric.
     """
-    import tempfile
-
     from pyspark.sql import Window
 
     from hyperdx_spark import traces
@@ -5051,7 +5042,7 @@ def q_trace_waterfall(spark, sf_dir):
                F.lit("STATUS_CODE_ERROR")).otherwise(
             F.lit("STATUS_CODE_OK")).alias("status_code"),
     )
-    tmp = tempfile.mkdtemp(prefix="hdx_spans_")
+    tmp = tempdir("hdx_spans_")
     spans.coalesce(2).write.mode("overwrite").parquet(f"{tmp}/spans.parquet")
     src = Source(
         table="spans", kind="trace", timestamp_value_expression="ts",
@@ -6136,6 +6127,7 @@ FROM ({O_SESSIONIZE})
 """
 
 
+@scoped
 def q_mcp_tools(spark, sf_dir):
     """MCP tool family consolidated: trace waterfall / pickers / breakdown
     (already (part,k,s,v)-shaped) + emerging & disappeared signals
@@ -6181,6 +6173,7 @@ SELECT 'sig|' || part || '|basen' AS part, 0::BIGINT AS k,
 """
 
 
+@scoped
 def q_ann_multimodal(spark, sf_dir):
     """Pipeline consolidation: the six ANN/PCA tiers (q_ann_indexed) + the
     multimodal decode features (q_multimodal_features) — the two entries

@@ -41,6 +41,8 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hyperdx_spark.session import broadcast, persist, release, scoped
+
 from .sampling import sample_key
 
 #: micro-unit scaling for the fixed-point vector representation
@@ -102,6 +104,7 @@ def _assign_expr(q_col: Column, centroids: Sequence[Sequence[int]]) -> Column:
     return expr.otherwise(F.lit(0)).alias("cluster")
 
 
+@scoped
 def kmeans_init(
     df: DataFrame,
     k: int,
@@ -165,35 +168,30 @@ def kmeans_init(
     # naive re-score-all-chosen O(k²·N·dim) (review r14 finding). The
     # lineage grows one `least` per round; cache so the quantize + earlier
     # distances evaluate once.
-    cur = base.select(
+    cur = persist(base.select(
         "__id", "__q", _sq_dist(F.col("__q"), cents[0]).alias("__d")
-    ).persist()
+    ))
     prev = None
-    try:
-        for _ in range(k - 1):
-            # this collect materializes cur FROM prev's cache; only then
-            # is prev safe to release (unpersisting earlier would force
-            # the whole lineage — every prior fold — to re-evaluate)
-            row = cur.orderBy(F.desc("__d"), F.asc("__id")).limit(1).collect()
-            if prev is not None:
-                prev.unpersist()
-            nxt = list(row[0]["__q"])
-            if row[0]["__d"] == 0:
-                raise ValueError(
-                    f"k={k} but corpus has fewer than {k} distinct vectors"
-                )
-            cents.append(nxt)
-            nxt_cur = cur.select(
-                "__id", "__q",
-                F.least(
-                    F.col("__d"), _sq_dist(F.col("__q"), nxt)
-                ).alias("__d"),
-            ).persist()
-            prev, cur = cur, nxt_cur
-    finally:
+    for _ in range(k - 1):
+        # this collect materializes cur FROM prev's cache; only then
+        # is prev safe to release (releasing earlier would force
+        # the whole lineage — every prior fold — to re-evaluate)
+        row = cur.orderBy(F.desc("__d"), F.asc("__id")).limit(1).collect()
         if prev is not None:
-            prev.unpersist()
-        cur.unpersist()
+            release(prev)
+        nxt = list(row[0]["__q"])
+        if row[0]["__d"] == 0:
+            raise ValueError(
+                f"k={k} but corpus has fewer than {k} distinct vectors"
+            )
+        cents.append(nxt)
+        nxt_cur = persist(cur.select(
+            "__id", "__q",
+            F.least(
+                F.col("__d"), _sq_dist(F.col("__q"), nxt)
+            ).alias("__d"),
+        ))
+        prev, cur = cur, nxt_cur
     return cents
 
 
@@ -212,7 +210,7 @@ def _mindist_fold_arrow(df: DataFrame, new_cents: Sequence[Sequence[int]]) -> Da
     import numpy as np
 
     cent = np.asarray([list(c) for c in new_cents], dtype=np.int64)
-    bc = df.sparkSession.sparkContext.broadcast(cent)
+    bc = broadcast(df.sparkSession, cent)
     cmax, dim, limit, chunk = _dist_params(cent)
     schema = df.schema
 
@@ -298,6 +296,7 @@ def _weighted_kmeans_driver(cand, w, k: int, *, iterations: int = 30) -> list[li
     return [[int(x) for x in row] for row in cent]
 
 
+@scoped
 def _kmeans_parallel_sample(
     base: DataFrame,
     k: int,
@@ -347,79 +346,73 @@ def _kmeans_parallel_sample(
     if not first:
         raise ValueError(f"k={k} but corpus has only 0 rows")
     meta: list[tuple] = [(first[0]["__id"], -1, list(first[0]["__q"]))]
-    cur = base.select(
+    cur = persist(base.select(
         "__id", "__q", _sq_dist(F.col("__q"), meta[0][2]).alias("__d")
-    ).persist()
+    ))
     prev = None
-    try:
-        for r in range(rounds):
-            # this agg materializes cur FROM prev's cache (same discipline
-            # as the farthest-first loop); only then is prev releasable
-            psi_row = cur.agg(
-                F.sum(F.col("__d").cast("decimal(38,0)")).alias("psi")
-            ).collect()
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            psi = int(psi_row[0]["psi"] or 0)
-            if psi == 0:
-                break  # every row coincides with a candidate
-            h = F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            F.col("__id").cast("string"),
-                            F.lit(str(seed)),
-                            F.lit("kmpar"),
-                            F.lit(str(r)),
-                        )
-                    ),
-                    1,
-                    _KEY_DIGITS,
-                ),
-                16,
-                10,
-            ).cast("long")
-            sel = (h.cast("double") * F.lit(float(psi))) < (
-                (F.lit(float(ell)) * F.col("__d").cast("double"))
-                * F.lit(float(_KEY_SPACE))
-            )
-            # orderBy before collect: candidate order must not depend on
-            # partitioning (it seeds the deterministic driver recluster).
-            # limit(remaining+1) bounds the transfer; we RAISE (never
-            # truncate — a truncated candidate set would silently change
-            # the deterministic init) if the realized selection overshoots
-            # the driver bound, e.g. a pathological distance distribution
-            # where ℓ·d²/ψ ≥ 1 for huge row counts.
-            remaining = MAX_INIT_CANDIDATES - len(meta)
-            rows = (
-                cur.where(sel)
-                .select("__id", "__q")
-                .orderBy("__id")
-                .limit(remaining + 1)
-                .collect()
-            )
-            if len(rows) > remaining:
-                raise ValueError(
-                    f"k-means‖ round {r} realized more than {remaining} "
-                    f"candidate selections (driver bound "
-                    f"MAX_INIT_CANDIDATES={MAX_INIT_CANDIDATES}, "
-                    f"{len(meta)} already held) — lower oversample/rounds"
-                )
-            new = [list(x["__q"]) for x in rows]
-            if new:
-                meta.extend((x["__id"], r, list(x["__q"])) for x in rows)
-                if r < rounds - 1:
-                    nxt = _mindist_fold_arrow(cur, new).persist()
-                    prev, cur = cur, nxt
-    finally:
+    for r in range(rounds):
+        # this agg materializes cur FROM prev's cache (same discipline
+        # as the farthest-first loop); only then is prev releasable
+        psi_row = cur.agg(
+            F.sum(F.col("__d").cast("decimal(38,0)")).alias("psi")
+        ).collect()
         if prev is not None:
-            prev.unpersist()
-        cur.unpersist()
+            release(prev)
+        psi = int(psi_row[0]["psi"] or 0)
+        if psi == 0:
+            break  # every row coincides with a candidate
+        h = F.conv(
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        ":",
+                        F.col("__id").cast("string"),
+                        F.lit(str(seed)),
+                        F.lit("kmpar"),
+                        F.lit(str(r)),
+                    )
+                ),
+                1,
+                _KEY_DIGITS,
+            ),
+            16,
+            10,
+        ).cast("long")
+        sel = (h.cast("double") * F.lit(float(psi))) < (
+            (F.lit(float(ell)) * F.col("__d").cast("double"))
+            * F.lit(float(_KEY_SPACE))
+        )
+        # orderBy before collect: candidate order must not depend on
+        # partitioning (it seeds the deterministic driver recluster).
+        # limit(remaining+1) bounds the transfer; we RAISE (never
+        # truncate — a truncated candidate set would silently change
+        # the deterministic init) if the realized selection overshoots
+        # the driver bound, e.g. a pathological distance distribution
+        # where ℓ·d²/ψ ≥ 1 for huge row counts.
+        remaining = MAX_INIT_CANDIDATES - len(meta)
+        rows = (
+            cur.where(sel)
+            .select("__id", "__q")
+            .orderBy("__id")
+            .limit(remaining + 1)
+            .collect()
+        )
+        if len(rows) > remaining:
+            raise ValueError(
+                f"k-means‖ round {r} realized more than {remaining} "
+                f"candidate selections (driver bound "
+                f"MAX_INIT_CANDIDATES={MAX_INIT_CANDIDATES}, "
+                f"{len(meta)} already held) — lower oversample/rounds"
+            )
+        new = [list(x["__q"]) for x in rows]
+        if new:
+            meta.extend((x["__id"], r, list(x["__q"])) for x in rows)
+            if r < rounds - 1:
+                nxt = persist(_mindist_fold_arrow(cur, new))
+                prev, cur = cur, nxt
 
     cand = np.asarray([m[2] for m in meta], dtype=np.int64)
-    bc = base.sparkSession.sparkContext.broadcast(cand)
+    bc = broadcast(base.sparkSession, cand)
     cmax, dim, limit, chunk = _dist_params(cand)
 
     def weigh(batches):
@@ -610,6 +603,7 @@ def _chunked_sqdist_reduce(q, cent, cmax: int, limit: int, chunk: int,
     return out
 
 
+@scoped
 def _assign_arrow(
     df: DataFrame,
     centroids: Sequence[Sequence[int]],
@@ -631,7 +625,7 @@ def _assign_arrow(
     import numpy as np
 
     cent = np.asarray([list(c) for c in centroids], dtype=np.int64)
-    bc = df.sparkSession.sparkContext.broadcast(cent)
+    bc = broadcast(df.sparkSession, cent)
     cols = list(keep_cols)
     fields = [
         f"`{c}` {df.schema[c].dataType.simpleString()}" for c in cols
@@ -670,6 +664,7 @@ def _assign_arrow(
     return src.mapInPandas(run, out_schema)
 
 
+@scoped
 def kmeans_update(
     df: DataFrame,
     centroids: Sequence[Sequence[int]],
@@ -773,6 +768,7 @@ def kmeans_fit(
     return cents
 
 
+@scoped
 def kmeans_assign(
     df: DataFrame,
     centroids: Sequence[Sequence[int]],
@@ -812,6 +808,7 @@ def kmeans_assign(
     )
 
 
+@scoped
 def drop_prototypical(
     df: DataFrame,
     centroids: Sequence[Sequence[int]],

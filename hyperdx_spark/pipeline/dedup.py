@@ -49,72 +49,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hyperdx_spark.session import local_frame
+from hyperdx_spark.session import local_checkpoint, local_frame, persist, release, scoped
 from hyperdx_spark.sqlident import sql_ident
 from hyperdx_spark.pipeline.text import TOKEN_SPLIT, fingerprint, tokens
-
-
-def _register_cached(result: DataFrame, cached: list) -> DataFrame:
-    """Attach the intermediates an operator persisted on behalf of *result*
-    so callers can release them with :func:`release_cached` after the
-    terminal action. Long-lived sessions that call a persisting operator
-    repeatedly would otherwise accumulate cached blocks until executor
-    storage evicts them (ADVICE r4)."""
-    result._hyperdx_cached = list(cached)
-    return result
-
-
-def _inherit_cached(*children) -> list:
-    """Collect the cached-intermediate registrations of *children* so a
-    composing operator can re-register them on ITS result — without this,
-    callers of a composed public API (drop_near_duplicates, semantic_dedup)
-    could never release blocks persisted by the inner operators, exactly
-    the long-lived-session accumulation release_cached exists to prevent
-    (ADVICE r5)."""
-    out: list = []
-    for child in children:
-        out.extend(getattr(child, "_hyperdx_cached", ()))
-    return out
-
-
-class _LocalCheckpointHandle:
-    """``unpersist()`` handle for a ``localCheckpoint``'d DataFrame.
-
-    ``DataFrame.unpersist()`` only uncaches through the cache manager and
-    does NOT free a local checkpoint's RDD blocks (ADVICE r5 — measured:
-    storage info keeps the block after ``unpersist()``), so the handle
-    reaches through the checkpointed Dataset's ``LogicalRDD`` to the
-    internal RDD and unpersists that. NOTE: freeing checkpoint blocks
-    destroys the (truncated) lineage — frames derived from the checkpoint
-    FAIL to recompute afterwards, so release only after the terminal
-    action (which is :func:`release_cached`'s documented call point).
-    """
-
-    def __init__(self, df: DataFrame):
-        try:
-            # analyzed plan of a freshly checkpointed Dataset is the
-            # LogicalRDD wrapping the persisted internal RDD
-            self._jrdd = df._jdf.queryExecution().analyzed().rdd()
-        except Exception:  # pragma: no cover - Connect / plan-shape drift
-            self._jrdd = None
-
-    def unpersist(self) -> None:
-        if self._jrdd is not None:
-            try:
-                self._jrdd.unpersist(False)
-            except Exception:  # pragma: no cover
-                pass
-
-
-def release_cached(result: DataFrame) -> None:
-    """Unpersist every intermediate a pipeline operator cached on behalf of
-    *result* (no-op for frames without registered intermediates). Call after
-    the terminal action on *result*. Plain cached intermediates recompute
-    their lineage on further actions; local-checkpoint intermediates
-    (``dedup_groups``'s lineage truncation) do NOT — their lineage is gone
-    once freed — so treat release as the end of the frame's life."""
-    for cached in getattr(result, "_hyperdx_cached", ()):
-        cached.unpersist()
 
 
 # ---------------------------------------------------------------- exact
@@ -251,6 +188,7 @@ def shingle_table(
 
 # ---------------------------------------------------------------- jaccard
 
+@scoped
 def ngram_jaccard_pairs(
     df: DataFrame,
     *,
@@ -273,9 +211,9 @@ def ngram_jaccard_pairs(
     """
     # the shingle DAG feeds two plan branches (postings + set sizes);
     # persist it so the tokenize/window work runs once, not per branch
-    # (release with release_cached(result); storage_level=DISK_ONLY trades
-    # re-read cost for executor memory at corpus scale)
-    sh = shingle_rows(df, text_col, id_col, n).persist(storage_level)
+    # (storage_level=DISK_ONLY trades re-read cost for executor memory at
+    # corpus scale)
+    sh = persist(shingle_rows(df, text_col, id_col, n), storage_level)
     # Per-doc set size rides INTO the postings as struct(id, sz) (r17):
     # the former groupBy(id) sizes relation forced two joins of the (much
     # larger) candidate-pair table afterwards — and at gate scale Spark
@@ -318,7 +256,7 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count("*").alias("inter"))
     )
-    out = (
+    return (
         inter.withColumn(
             "jaccard",
             F.col("inter").cast("double")
@@ -327,7 +265,6 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _register_cached(out, [sh])
 
 
 # ---------------------------------------------------------------- C4 span dedup
@@ -379,7 +316,7 @@ def duplicate_span_removal(
     Peak storage is the persisted exploded-sentence table (~corpus bytes) +
     the span-hash table; at corpus scale pass
     ``storage_level=StorageLevel.DISK_ONLY`` to keep it off the executor
-    heap, and call :func:`release_cached` on the result after the action.
+    heap.
     """
     return _duplicate_unit_removal(
         df, unit_pattern=SENTENCE_PATTERN, span=span, text_col=text_col,
@@ -418,6 +355,7 @@ def duplicate_window_removal(
     )
 
 
+@scoped
 def _duplicate_unit_removal(
     df: DataFrame,
     *,
@@ -433,14 +371,14 @@ def _duplicate_unit_removal(
     # sent feeds four branches (span hashing, keeper lookup, rebuild,
     # totals) — persist so the segmentation explode runs once, not per
     # consumer (plan audit showed 4 Generates over the raw text otherwise)
-    sent = df.select(
+    sent = persist(df.select(
         F.col(id_col).alias("id"),
         F.posexplode(
             F.regexp_extract_all(text_col, F.lit(unit_pattern), F.lit(0))
         ).alias("idx", "s"),
-    ).persist(storage_level)
+    ), storage_level)
     w_doc = Window.partitionBy("id").orderBy("idx")
-    spans = (
+    spans = persist(
         sent.withColumn(
             "span_txt",
             F.array_join(
@@ -449,9 +387,9 @@ def _duplicate_unit_removal(
         )
         .withColumn("__m", F.count("*").over(Window.partitionBy("id")))
         .where(F.col("idx") <= F.col("__m") - span)
-        .select("id", "idx", F.md5("span_txt").alias("h"))
+        .select("id", "idx", F.md5("span_txt").alias("h")),
         # read twice: keeper aggregate + removed-occurrence join
-        .persist(storage_level)
+        storage_level,
     )
     keepers = (
         spans.groupBy("h")
@@ -489,7 +427,7 @@ def _duplicate_unit_removal(
         F.expr("count(*) AS __n_units"),
         F.expr("count_if(__d IS NULL) AS n_kept"),
     )
-    out = (
+    return (
         df.select(F.col(id_col).alias("id"))
         .join(rebuilt, on="id", how="left")
         .select(
@@ -502,11 +440,11 @@ def _duplicate_unit_removal(
             ).alias("n_dropped"),
         )
     )
-    return _register_cached(out, [sent, spans])
 
 
 # ---------------------------------------------------------------- winnowing
 
+@scoped
 def winnow_pairs(
     df: DataFrame,
     *,
@@ -543,9 +481,10 @@ def winnow_pairs(
 
     # gram hashes evaluate once per doc, window minima slide via a
     # codegen'd frame aggregate
-    fp = winnow_fingerprint_rows(
-        df, text_col=text_col, id_col=id_col, k=k, w=w
-    ).persist(storage_level)
+    fp = persist(
+        winnow_fingerprint_rows(df, text_col=text_col, id_col=id_col, k=k, w=w),
+        storage_level,
+    )
     # Per-doc fingerprint-set size rides INTO the postings as struct(id, sz)
     # (r17, same device as ngram_jaccard_pairs): the former sizes relation
     # forced two joins of the larger candidate-pair table. sz is
@@ -580,7 +519,7 @@ def winnow_pairs(
         )
         .agg(F.count("*").alias("inter"))
     )
-    out = (
+    return (
         inter.withColumn(
             "overlap",
             F.col("inter").cast("double")
@@ -589,11 +528,11 @@ def winnow_pairs(
         .where(F.col("overlap") >= threshold)
         .select("id_a", "id_b", "overlap")
     )
-    return _register_cached(out, [fp])
 
 
 # ---------------------------------------------------------------- minhash
 
+@scoped
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
@@ -631,9 +570,8 @@ def minhash_lsh_pairs(
     exploded = shingle_rows(df, text_col, id_col, ngram)
     if verify_threshold is not None:
         # three plan branches read the shingles (signatures + two verify
-        # joins) — persist so the expensive DAG runs once (release with
-        # release_cached(result))
-        exploded = exploded.persist(storage_level)
+        # joins) — persist so the expensive DAG runs once
+        exploded = persist(exploded, storage_level)
     # seeds are EXPLODED into rows rather than emitted as num_hashes agg
     # columns: a 32-wide min-aggregate compiles into a huge codegen unit
     # (multi-second janino compile on first execution); the narrow
@@ -688,7 +626,7 @@ def minhash_lsh_pairs(
     ).join(shingle_sets.selectExpr("id AS id_b", "sh AS sh_b"), on="id_b")
     inter = "CAST(size(array_intersect(sh_a, sh_b)) AS DOUBLE)"
     union = f"CAST((size(sh_a) + size(sh_b) - {inter}) AS DOUBLE)"
-    out = (
+    return (
         cand.selectExpr(
             "*",
             f"CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END"
@@ -697,7 +635,6 @@ def minhash_lsh_pairs(
         .where(f"jaccard >= {float(verify_threshold)!r}D")
         .select("id_a", "id_b", "jaccard")
     )
-    return _register_cached(out, [exploded])
 
 
 # ---------------------------------------------------------------- simhash
@@ -915,7 +852,7 @@ def _dedup_groups_local(
             f"{max_iterations} is split into multiple groups; raise "
             f"max_iterations for chain-shaped near-dup graphs",
             RuntimeWarning,
-            stacklevel=3,
+            stacklevel=4,
         )
     spark = pairs.sparkSession
     out_schema = StructType(
@@ -929,6 +866,7 @@ def _dedup_groups_local(
     return local_frame(spark, data, out_schema)
 
 
+@scoped
 def dedup_groups(
     pairs: DataFrame,
     *,
@@ -954,7 +892,7 @@ def dedup_groups(
     local = _dedup_groups_local(pairs, a_col, b_col, max_iterations)
     if local is not None:
         return local
-    edges = (
+    edges = persist(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(
             pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
@@ -983,8 +921,7 @@ def dedup_groups(
         # every propagation round joins the edge list — persist it, or the
         # UPSTREAM pair-finding DAG (LSH bands, self-join, verify) re-runs
         # once per iteration (measured ~6x the whole semantic-dedup cost at
-        # sf1 before this). Released via release_cached on the result.
-        .persist()
+        # sf1 before this).
     )
     labels = (
         edges.select(F.col("src").alias("id")).distinct()
@@ -1008,78 +945,56 @@ def dedup_groups(
             F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")
         ).collect()[0]["s"]
 
-    converged = False
-    cp_handles: list[_LocalCheckpointHandle] = []
-    new_labels: DataFrame | None = None
+    converged = labels_checkpointed = False
     prev_sum = object()  # never equal on the first comparison
-    # unpersist-on-raise: the loop runs jobs (eager checkpoints, the
-    # convergence count) while edges/labels/checkpoint blocks are
-    # persisted — a mid-loop failure would strand them all in a
-    # long-lived session, since only a RETURNED frame's registrations
-    # reach release_cached.
-    try:
+    if numeric_ids:
+        # seed with the INITIAL label sum (r16 ADVICE #1): an
+        # already-converged graph (self-loops, empty edge set) is then
+        # detected in iteration 1 instead of needing a second round —
+        # and convergence landing exactly on max_iterations no longer
+        # raises a spurious did-not-converge warning. One extra small
+        # aggregate; it materializes the persisted edges the first
+        # propagation round would have paid for anyway.
+        prev_sum = _label_sum(labels)
+    for it in range(max_iterations):
+        # self-loops make the neighbor-min aggregate include the node's
+        # own label, so this IS the new label — no least()/left-join
+        # pass (see the edges construction note)
+        new_labels = (
+            edges.join(labels, edges.dst == labels.id)
+            .groupBy("src")
+            .agg(F.min("lbl").alias("lbl"))
+            .withColumnRenamed("src", "id")
+        )
+        # Truncate lineage every few rounds: without this the plan tree
+        # at iteration N nests N joins and analysis/scheduling cost
+        # blows up on deep components. The convergence count right after
+        # materializes the (lazy) checkpoint.
+        checkpointed = it > 0 and it % 5 == 0
+        new_labels = (local_checkpoint if checkpointed else persist)(new_labels)
         if numeric_ids:
-            # seed with the INITIAL label sum (r16 ADVICE #1): an
-            # already-converged graph (self-loops, empty edge set) is then
-            # detected in iteration 1 instead of needing a second round —
-            # and convergence landing exactly on max_iterations no longer
-            # raises a spurious did-not-converge warning. One extra small
-            # aggregate; it materializes the persisted edges the first
-            # propagation round would have paid for anyway.
-            prev_sum = _label_sum(labels)
-        for it in range(max_iterations):
-            # self-loops make the neighbor-min aggregate include the node's
-            # own label, so this IS the new label — no least()/left-join
-            # pass (see the edges construction note)
-            new_labels = (
-                edges.join(labels, edges.dst == labels.id)
-                .groupBy("src")
-                .agg(F.min("lbl").alias("lbl"))
-                .withColumnRenamed("src", "id")
-            )
-            # Truncate lineage every few rounds: without this the plan tree
-            # at iteration N nests N joins and analysis/scheduling cost
-            # blows up on deep components.
-            if it > 0 and it % 5 == 0:
-                # LAZY checkpoint: the handle must exist BEFORE anything
-                # materializes the blocks — an eager checkpoint whose job
-                # dies mid-way leaves partial blocks with no handle, which
-                # the except path below could never free (review r16).
-                # The convergence count right after materializes it.
-                new_labels = new_labels.localCheckpoint(eager=False)
-                # DataFrame.unpersist() cannot free checkpoint blocks —
-                # keep a LogicalRDD handle so release_cached frees them
-                # (ADVICE r5)
-                cp_handles.append(_LocalCheckpointHandle(new_labels))
-            else:
-                new_labels = new_labels.persist()
-            if numeric_ids:
-                new_sum = _label_sum(new_labels)
-                unchanged = new_sum == prev_sum
-                prev_sum = new_sum
-            else:
-                unchanged = (
-                    new_labels.join(
-                        labels.withColumnRenamed("lbl", "old"), on="id"
-                    )
-                    .where(F.col("lbl") != F.col("old"))
-                    .limit(1)
-                    .count()
-                    == 0
+            new_sum = _label_sum(new_labels)
+            unchanged = new_sum == prev_sum
+            prev_sum = new_sum
+        else:
+            unchanged = (
+                new_labels.join(
+                    labels.withColumnRenamed("lbl", "old"), on="id"
                 )
-            labels.unpersist()  # no-op on the (unpersisted) first iteration
-            labels = new_labels
-            if unchanged:
-                converged = True
-                break
-    except BaseException:
-        edges.unpersist()
-        labels.unpersist()
-        if new_labels is not None and new_labels is not labels:
-            new_labels.unpersist()
-        for handle in cp_handles:
-            handle.unpersist()
-        raise
+                .where(F.col("lbl") != F.col("old"))
+                .limit(1)
+                .count()
+                == 0
+            )
+        # the previous round's cache is done with; a checkpoint round's
+        # blocks stay with the scope, as the truncated lineage of the
+        # rounds after it cannot recompute them
+        if not labels_checkpointed:
+            release(labels)
+        labels, labels_checkpointed = new_labels, checkpointed
+        if unchanged:
+            converged = True
+            break
     if not converged:
         warnings.warn(
             f"dedup_groups: min-label propagation did not converge within "
@@ -1087,16 +1002,13 @@ def dedup_groups(
             f"{max_iterations} is split into multiple groups; raise "
             f"max_iterations for chain-shaped near-dup graphs",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
-    out = labels.select(
+    return labels.select(
         F.col("id"),
         F.col("lbl").alias("group_id"),
         (F.col("id") == F.col("lbl")).alias("is_keeper"),
     )
-    # labels.unpersist() is a no-op when the loop ended on a checkpoint
-    # iteration — the cp_handles free those blocks
-    return _register_cached(out, [edges, labels, *cp_handles])
 
 
 # ---------------------------------------------------------------- contamination
@@ -1278,6 +1190,7 @@ def pick_keepers(
     )
 
 
+@scoped
 def drop_near_duplicates(
     corpus: DataFrame,
     pairs: DataFrame,
@@ -1297,16 +1210,10 @@ def drop_near_duplicates(
     The dropped-id side is bounded by the number of clustered documents,
     so the final anti-join broadcasts under AQE whenever near-dups are a
     small fraction of the corpus.
-
-    Intermediates persisted by the inner operators — *pairs*' (when it came
-    from an LSH pair finder) and ``dedup_groups``' — are re-registered on
-    the returned frame, so one ``release_cached(result)`` frees the whole
-    composition (ADVICE r5).
     """
     groups = dedup_groups(
         pairs, a_col=a_col, b_col=b_col, max_iterations=max_iterations
     )
-    inherited = _inherit_cached(pairs, groups)
     if score_col is not None:
         groups = pick_keepers(
             groups, corpus, id_col=id_col, score_col=score_col
@@ -1314,10 +1221,10 @@ def drop_near_duplicates(
     losers = groups.where(~F.col("is_keeper")).select(
         F.col("id").alias(id_col)
     )
-    out = corpus.join(losers, on=id_col, how="left_anti")
-    return _register_cached(out, inherited)
+    return corpus.join(losers, on=id_col, how="left_anti")
 
 
+@scoped
 def semantic_dedup(
     corpus: DataFrame,
     embeddings: DataFrame,
@@ -1366,14 +1273,10 @@ def semantic_dedup(
     at a specific cosine must hold regardless of cluster geometry.
 
     ``max_bucket_size`` defaults to ``cosine_pairs``'s 10k cap (sf10-proven
-    mandatory at scale; ``None`` opts out). Blocks persisted by the inner
-    operators are registered on the result — one
-    ``dedup.release_cached(result)`` after the terminal action frees the
-    signature frame, edge list and checkpoint blocks (ADVICE r5).
+    mandatory at scale; ``None`` opts out).
     """
     from hyperdx_spark.pipeline.similarity import cosine_pairs
 
-    cached: list = []
     if block_k is not None:
         if block_col is not None:
             raise ValueError(
@@ -1391,13 +1294,11 @@ def semantic_dedup(
         # which since r16 carries the vectors) and mapInPandas assignments
         # cannot be collapsed by Catalyst — without the barrier the
         # dominant k x N distance pass re-runs each time (the banded path
-        # persists its signature frame for the same reason). Registered on
-        # the result for release_cached.
-        embeddings = kmeans_assign(
+        # persists its signature frame for the same reason).
+        embeddings = persist(kmeans_assign(
             embeddings, cents, vec_col=vec_col,
             cluster_col="__sem_blk", method="arrow",
-        ).persist()
-        cached.append(embeddings)
+        ))
         block_col = "__sem_blk"
         exhaustive = True  # we created the blocks: within-block all-pairs
         # is the contract (block_col passed BY THE CALLER instead forwards
@@ -1405,44 +1306,30 @@ def semantic_dedup(
         # block_col-requires-exhaustive error rather than silently
         # upgrading a banded request to O(sum block^2))
 
-    # unpersist-on-raise: the assignment frame is persisted BEFORE the
-    # downstream wiring; if cosine_pairs validation (or anything after)
-    # raises, the block would otherwise leak in a long-lived session until
-    # storage eviction — the accumulation release_cached exists to prevent
-    # (r15 advice)
-    pairs = None
-    try:
-        pairs = cosine_pairs(
-            embeddings,
-            id_col=emb_id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            num_planes=num_planes,
-            bands=bands,
-            dim=dim,
-            seed=seed,
-            max_bucket_size=max_bucket_size,
-            min_expected_recall=min_expected_recall,
-            exhaustive=exhaustive,
-            block_col=block_col,
-        )
-        out = drop_near_duplicates(
-            corpus,
-            pairs,
-            id_col=id_col,
-            score_col=score_col,
-            max_iterations=max_iterations,
-        )
-    except BaseException:
-        release = list(cached)
-        if pairs is not None:
-            release += _inherit_cached(pairs)
-        for c in release:
-            c.unpersist()
-        raise
-    return _register_cached(out, _inherit_cached(out) + cached)
+    pairs = cosine_pairs(
+        embeddings,
+        id_col=emb_id_col,
+        vec_col=vec_col,
+        threshold=threshold,
+        num_planes=num_planes,
+        bands=bands,
+        dim=dim,
+        seed=seed,
+        max_bucket_size=max_bucket_size,
+        min_expected_recall=min_expected_recall,
+        exhaustive=exhaustive,
+        block_col=block_col,
+    )
+    return drop_near_duplicates(
+        corpus,
+        pairs,
+        id_col=id_col,
+        score_col=score_col,
+        max_iterations=max_iterations,
+    )
 
 
+@scoped
 def d4_select(
     corpus: DataFrame,
     embeddings: DataFrame,
@@ -1475,8 +1362,7 @@ def d4_select(
     :func:`semantic_dedup` caller-block path — one SemDeDup wiring, not
     two) and the prototype window; the SemDeDup survivor frame is
     persisted too (it feeds both the prototype stage and the final
-    anti-join).  Release everything with
-    ``dedup.release_cached(result)`` after the terminal action.
+    anti-join).
 
     Scale shape: O(rounds) init passes + row-local assignment +
     O(Σ cluster²) capped pair join + one window shuffle per cluster —
@@ -1507,36 +1393,23 @@ def d4_select(
             embeddings, block_k, id_col=emb_id_col, vec_col=vec_col,
             seed=seed, iterations=block_iterations, init=block_init,
         )
-    assigned = kmeans_assign(
+    assigned = persist(kmeans_assign(
         embeddings, cents, vec_col=vec_col,
         cluster_col="__sem_blk", method="arrow", dist_col="__sem_d",
-    ).persist()
-    # unpersist-on-raise, same discipline as semantic_dedup (r15 advice):
-    # semantic_dedup releases ITS OWN persists when it raises, but the
-    # frames persisted HERE must be released here or they leak
-    try:
-        sem = semantic_dedup(
-            corpus, assigned,
-            threshold=threshold, id_col=id_col, emb_id_col=emb_id_col,
-            vec_col=vec_col, score_col=score_col, seed=seed,
-            max_iterations=max_iterations, max_bucket_size=max_bucket_size,
-            exhaustive=True, block_col="__sem_blk",
-        ).persist()
-    except BaseException:
-        assigned.unpersist()
-        raise
-    try:
-        survivors = assigned.join(
-            sem.select(F.col(id_col).alias(emb_id_col)),
-            on=emb_id_col, how="left_semi",
-        )
-        dropped = prototype_filter(
-            survivors, drop_frac, invert=True,
-            id_col=emb_id_col, cluster_col="__sem_blk", dist_col="__sem_d",
-        ).select(F.col(emb_id_col).alias(id_col))
-        out = sem.join(dropped, on=id_col, how="left_anti")
-    except BaseException:
-        for c in _inherit_cached(sem) + [assigned, sem]:
-            c.unpersist()
-        raise
-    return _register_cached(out, _inherit_cached(sem) + [assigned, sem])
+    ))
+    sem = persist(semantic_dedup(
+        corpus, assigned,
+        threshold=threshold, id_col=id_col, emb_id_col=emb_id_col,
+        vec_col=vec_col, score_col=score_col, seed=seed,
+        max_iterations=max_iterations, max_bucket_size=max_bucket_size,
+        exhaustive=True, block_col="__sem_blk",
+    ))
+    survivors = assigned.join(
+        sem.select(F.col(id_col).alias(emb_id_col)),
+        on=emb_id_col, how="left_semi",
+    )
+    dropped = prototype_filter(
+        survivors, drop_frac, invert=True,
+        id_col=emb_id_col, cluster_col="__sem_blk", dist_col="__sem_d",
+    ).select(F.col(emb_id_col).alias(id_col))
+    return sem.join(dropped, on=id_col, how="left_anti")

@@ -36,7 +36,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hyperdx_spark.io import write_bucketed
-from hyperdx_spark.pipeline.dedup import _LocalCheckpointHandle, fingerprint
+from hyperdx_spark.pipeline.dedup import fingerprint
+from hyperdx_spark.session import local_checkpoint, scoped
 
 DEFAULT_BUCKETS = 256
 
@@ -137,6 +138,7 @@ def append_novel_to_store(
     )
 
 
+@scoped
 def compact_exact_store(spark: SparkSession, table: str) -> None:
     """Store hygiene after many append cycles (the ``OPTIMIZE FINAL``
     analogue of :func:`hyperdx_spark.streaming.mv_maintain.compact_rollup`):
@@ -153,29 +155,17 @@ def compact_exact_store(spark: SparkSession, table: str) -> None:
     nothing to point readers at)."""
     buckets = _table_buckets(spark, table)
     staging, old = f"{table}__compacting", f"{table}__old"
-    compacted = (
-        spark.table(table)
-        .groupBy("fp")
-        .agg(F.min("keep_id").alias("keep_id"))
-        # LAZY: sever lineage from the table being replaced, but only
-        # materialize under the handle below — an eager checkpoint that
-        # dies mid-job would strand its partial blocks handle-less
-        .localCheckpoint(eager=False)
+    # sever lineage from the table being replaced; the checkpoint blocks
+    # (a full pass of the store) go with the scope when the call returns
+    compacted = local_checkpoint(
+        spark.table(table).groupBy("fp").agg(F.min("keep_id").alias("keep_id"))
     )
-    # the checkpoint blocks are a full pass of the store — free them
-    # deterministically once the staging write (the terminal action on
-    # the frame, and what materializes the blocks) finishes or fails,
-    # instead of waiting for JVM GC
-    handle = _LocalCheckpointHandle(compacted)
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        spark.sql(f"DROP TABLE IF EXISTS {old}")
-        write_bucketed(
-            compacted, staging, buckets=buckets, bucket_cols=["fp"],
-            sort_cols=["fp"],
-        )
-    finally:
-        handle.unpersist()
+    spark.sql(f"DROP TABLE IF EXISTS {staging}")
+    spark.sql(f"DROP TABLE IF EXISTS {old}")
+    write_bucketed(
+        compacted, staging, buckets=buckets, bucket_cols=["fp"],
+        sort_cols=["fp"],
+    )
     _swap_in_staging(spark, table)
 
 
@@ -189,6 +179,7 @@ def _swap_in_staging(spark: SparkSession, table: str) -> None:
     spark.sql(f"DROP TABLE {old}")
 
 
+@scoped
 def compact_minhash_store(spark: SparkSession, table: str) -> None:
     """Near-dup-store hygiene, the :func:`compact_exact_store` sibling:
     collapse the per-append files back into one bucketed write (dropping
@@ -197,21 +188,15 @@ def compact_minhash_store(spark: SparkSession, table: str) -> None:
     :func:`recover_exact_store` with this table name."""
     buckets = _table_buckets(spark, table)
     staging, old = f"{table}__compacting", f"{table}__old"
-    compacted = spark.table(table).dropDuplicates(
-        ["band", "bucket", "id"]
-    ).localCheckpoint(eager=False)  # lazy: handle first, materialize under it
-    # same deterministic release as compact_exact_store: a full-store
-    # checkpoint must not wait for GC (or leak on a failed write)
-    handle = _LocalCheckpointHandle(compacted)
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        spark.sql(f"DROP TABLE IF EXISTS {old}")
-        write_bucketed(
-            compacted, staging, buckets=buckets, bucket_cols=["bucket"],
-            sort_cols=["bucket"],
-        )
-    finally:
-        handle.unpersist()
+    compacted = local_checkpoint(
+        spark.table(table).dropDuplicates(["band", "bucket", "id"])
+    )
+    spark.sql(f"DROP TABLE IF EXISTS {staging}")
+    spark.sql(f"DROP TABLE IF EXISTS {old}")
+    write_bucketed(
+        compacted, staging, buckets=buckets, bucket_cols=["bucket"],
+        sort_cols=["bucket"],
+    )
     _swap_in_staging(spark, table)
 
 

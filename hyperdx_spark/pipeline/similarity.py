@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from hyperdx_spark.io import ensure_min_parallelism
-from hyperdx_spark.session import local_frame
+from hyperdx_spark.session import broadcast, local_checkpoint, local_frame, persist, release, scoped
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -204,21 +204,6 @@ _ALLPAIRS_MAX_ROWS = 131_072
 _ALLPAIRS_MAX_ELEMS = 16_777_216  # ~128 MB of float64 payload
 
 
-class _BroadcastHandle:
-    """``unpersist()`` adapter so a py4j Broadcast rides the
-    ``_register_cached``/``release_cached`` lifecycle like persisted
-    frames do."""
-
-    def __init__(self, bc):
-        self._bc = bc
-
-    def unpersist(self) -> None:
-        try:
-            self._bc.unpersist()
-        except Exception:  # pragma: no cover - already destroyed / Connect
-            pass
-
-
 def _allpairs_corpus_parts(rows):
     """Driver-side prep: per-dim (ids, matrix, sqrt-norm) for the broadcast.
 
@@ -253,6 +238,7 @@ def _allpairs_corpus_parts(rows):
     return parts
 
 
+@scoped
 def _allpairs_broadcast(
     df: DataFrame, id_col: str, vec_col: str, threshold: float
 ) -> Optional[DataFrame]:
@@ -292,7 +278,7 @@ def _allpairs_broadcast(
         return None
     spark = df.sparkSession
     parts = _allpairs_corpus_parts(ids.collect())
-    bc = spark.sparkContext.broadcast(parts)
+    bc = broadcast(spark, parts)
     t = float(threshold)
     id_sql_type = df.schema[id_col].dataType.simpleString()
     out_schema = f"id_a {id_sql_type}, id_b {id_sql_type}, cos double"
@@ -369,10 +355,7 @@ def _allpairs_broadcast(
                 )
 
     wide = ensure_min_parallelism(ids, key_cols=["id"], probe=df)
-    out = wide.mapInArrow(_batches, out_schema)
-    from hyperdx_spark.pipeline.dedup import _register_cached
-
-    return _register_cached(out, [_BroadcastHandle(bc)])
+    return wide.mapInArrow(_batches, out_schema)
 
 
 def cosine_topk(
@@ -549,6 +532,7 @@ def cosine_topk_lsh(
     )
 
 
+@scoped
 def cosine_pairs(
     df: DataFrame,
     *,
@@ -610,10 +594,7 @@ def cosine_pairs(
     2 x bands times per row (measured 6x the whole pair cost at 60
     planes; HOFs are interpreted, no CSE). Only (id, band, bucket) rides
     the candidate shuffle; vectors re-attach to the (much smaller)
-    deduplicated pair list for the exact-cosine verify. Release the cached
-    signature frame with ``dedup.release_cached(result)``."""
-    from hyperdx_spark.pipeline.dedup import _register_cached
-
+    deduplicated pair list for the exact-cosine verify."""
     if block_col is not None and not exhaustive:
         raise ValueError(
             "block_col requires exhaustive=True (within-block all-pairs); "
@@ -621,7 +602,6 @@ def cosine_pairs(
             "miss within-block boundary pairs"
         )
     if exhaustive:
-        cached: list = []
         if block_col is not None:
             # NULL never equi-joins: a NULL-blocked row would silently drop
             # out of EVERY pair, breaking exhaustive's recall-1 contract
@@ -666,47 +646,36 @@ def cosine_pairs(
                 # millions of rows) would otherwise fan out n² within-block
                 # pairs with no cap — the exact scenario the banded path's
                 # bucket cap exists for (r15 review)
-                big = (
+                big = persist(
                     ids.groupBy("__blk")
                     .agg(F.count("*").alias("__n"))
                     .where(F.col("__n") > max_bucket_size)
                     .select("__blk")
-                    .persist()
                 )
-                cached.append(big)
                 # no silent caps (r15 advice): the drop must be observable
                 # at runtime, not inferred.  The count is one agg job over
                 # the already-persisted ≤-#blocks frame the broadcast join
                 # reads anyway; collect() would instead be unbounded (up
                 # to n/max_bucket_size mega-blocks at corpus scale).
-                # unpersist-on-raise: the count job can fail, and the
-                # warning itself raises under warnings-as-errors — either
-                # way the freshly persisted frame must not leak (the
-                # semantic_dedup handler can only release what a RETURNED
-                # frame registers).
-                try:
-                    n_dropped = big.count()
-                    if n_dropped:
-                        warnings.warn(
-                            f"cosine_pairs: {n_dropped} block(s) exceed "
-                            f"max_bucket_size={max_bucket_size} and are "
-                            "DROPPED from exhaustive pairing (their rows "
-                            "pair with nothing) — a degenerate "
-                            "mega-cluster, or a block_k too small for the "
-                            "corpus; raise max_bucket_size / increase "
-                            "block_k, or pass max_bucket_size=None to "
-                            "pair them at O(n²) cost",
-                            RuntimeWarning,
-                            stacklevel=2,
-                        )
-                except BaseException:
-                    big.unpersist()
-                    raise
+                n_dropped = big.count()
+                if n_dropped:
+                    warnings.warn(
+                        f"cosine_pairs: {n_dropped} block(s) exceed "
+                        f"max_bucket_size={max_bucket_size} and are "
+                        "DROPPED from exhaustive pairing (their rows "
+                        "pair with nothing) — a degenerate "
+                        "mega-cluster, or a block_k too small for the "
+                        "corpus; raise max_bucket_size / increase "
+                        "block_k, or pass max_bucket_size=None to "
+                        "pair them at O(n²) cost",
+                        RuntimeWarning,
+                        stacklevel=3,
+                    )
                 ids = ids.join(F.broadcast(big), on="__blk", how="left_anti")
             a_, b_ = ids.alias("a"), ids.alias("b")
             # r16: Arrow fold-exact scorer (score_pairs_arrow) — the
             # interpreted HOF cosine was the block path's per-pair CPU wall
-            out = (
+            return (
                 score_pairs_arrow(
                     a_.join(b_, on=F.col("a.__blk") == F.col("b.__blk"))
                     .where(F.col("a.id") < F.col("b.id"))
@@ -719,7 +688,6 @@ def cosine_pairs(
                 )
                 .where(F.col("cos") >= threshold)
             )
-            return _register_cached(out, cached)
         else:
             # r17: broadcast all-pairs scorer — the corpus matrix crosses
             # the Python boundary ONCE (O(N·d) bytes) instead of once per
@@ -745,7 +713,7 @@ def cosine_pairs(
                 )
             )
         vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        out = (
+        return (
             score_pairs_arrow(
                 cand.join(
                     vecs.withColumnsRenamed({"id": "id_a", "v": "__va"}),
@@ -760,7 +728,6 @@ def cosine_pairs(
             .where(F.col("cos") >= threshold)
             .select("id_a", "id_b", "cos")
         )
-        return _register_cached(out, cached)
 
     if min_expected_recall is not None:
         expected = lsh_expected_recall(threshold, num_planes, bands)
@@ -775,16 +742,14 @@ def cosine_pairs(
                 "recall, or pass min_expected_recall=None to accept the "
                 "precision-heavy trade.",
                 RuntimeWarning,
-                stacklevel=2,
+                stacklevel=3,
             )
 
     sig = lsh_signature(F.col(vec_col), num_planes=num_planes, dim=dim, seed=seed)
     rows_per_band = num_planes // bands
     # persist barrier: a cached narrow frame is the one formation Catalyst
     # cannot collapse back into the band lambdas
-    sig_rows = df.select(
-        F.col(id_col).alias("id"), sig.alias("__sig")
-    ).persist()
+    sig_rows = persist(df.select(F.col(id_col).alias("id"), sig.alias("__sig")))
     banded = sig_rows.select(
         "id",
         F.explode(
@@ -823,7 +788,7 @@ def cosine_pairs(
         .dropDuplicates(["id_a", "id_b"])
     )
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    out = (
+    return (
         score_pairs_arrow(
             cand.join(
                 vecs.withColumnsRenamed({"id": "id_a", "v": "__va"}), on="id_a"
@@ -834,7 +799,6 @@ def cosine_pairs(
         .where(F.col("cos") >= threshold)
         .select("id_a", "id_b", "cos")
     )
-    return _register_cached(out, [sig_rows])
 
 
 def _centroids(
@@ -1066,6 +1030,7 @@ def cosine_topk_ivf(
 # ---------------------------------------------------------------------------
 
 
+@scoped
 def pq_codebooks(
     corpus: DataFrame,
     *,
@@ -1117,8 +1082,6 @@ def pq_codebooks(
     # sub-vectors (k-means iterations over the corpus — each is one
     # encode pass + one (subspace, code) aggregate; deterministic given the
     # deterministic init). Dead codewords keep their previous value.
-    from hyperdx_spark.pipeline.dedup import _LocalCheckpointHandle
-
     for _ in range(refine_iters):
         encode = pq_encode_arrow if arrow else pq_encode
         as_double = (
@@ -1131,33 +1094,25 @@ def pq_codebooks(
         ).withColumn("__u", as_double)
         # checkpoint barrier BEFORE the explode: the interpreted-HOF
         # encode expression would otherwise be re-evaluated per generated
-        # row downstream (measured ~20x slower without this).  Lazy, so
-        # the handle exists before the means collect materializes the
-        # blocks — a died-mid-job eager checkpoint would strand partial
-        # blocks handle-less (review r16)
-        enc = enc.select("pq_code", "__u").localCheckpoint(eager=False)
-        cp_handle = _LocalCheckpointHandle(enc)
-        try:
-            ex = enc.select(
-                F.posexplode("pq_code").alias("j", "c"), "__u"
-            ).select(
-                "j", "c", F.expr(f"slice(__u, j * {sub} + 1, {sub})").alias("sv")
+        # row downstream (measured ~20x slower without this)
+        enc = local_checkpoint(enc.select("pq_code", "__u"))
+        ex = enc.select(
+            F.posexplode("pq_code").alias("j", "c"), "__u"
+        ).select(
+            "j", "c", F.expr(f"slice(__u, j * {sub} + 1, {sub})").alias("sv")
+        )
+        means = (
+            ex.groupBy("j", "c")
+            .agg(
+                F.array(
+                    *[F.avg(F.element_at("sv", i + 1)) for i in range(sub)]
+                ).alias("mean")
             )
-            means = (
-                ex.groupBy("j", "c")
-                .agg(
-                    F.array(
-                        *[F.avg(F.element_at("sv", i + 1)) for i in range(sub)]
-                    ).alias("mean")
-                )
-                .collect()
-            )
-        finally:
-            # the collect is this iteration's terminal action — free the
-            # checkpoint blocks now (leak-safe on a failed job too)
-            # instead of waiting for JVM GC: at corpus scale each
-            # iteration's encode blocks are a full pass of codes
-            cp_handle.unpersist()
+            .collect()
+        )
+        # the collect is this iteration's terminal action: at corpus scale
+        # each iteration's encode blocks are a full pass of codes
+        release(enc)
         for r in means:
             books[r["j"]][r["c"]] = [float(x) for x in r["mean"]]
     return books
@@ -1607,6 +1562,7 @@ def _residuals_col(
     )
 
 
+@scoped
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -1696,22 +1652,19 @@ def build_ivfpq_index(
         # collect, the Lloyd-refinement encode, AND the final encode+write
         # — without the barrier the N x nlist assignment + residual pass
         # (the dominant build cost) re-runs three times
-        res_df = (_residuals_arrow if arrow else _residuals_col)(
+        res_df = persist((_residuals_arrow if arrow else _residuals_col)(
             assigned, cent_rows, "vec", cents.schema["cent_id"].dataType
-        ).persist()
-        try:
-            books = pq_codebooks(
-                res_df, id_col="match_id", vec_col="__res", m=m, codes=codes,
-                seed=seed, arrow=arrow, normalize=False,
-            )
-            enc = encode(
-                res_df, books, vec_col="__res", normalize=False
-            ).drop("__res")
-            enc.select("match_id", "vec", "pq_code", "cent_id").write.mode(
-                "overwrite"
-            ).partitionBy("cent_id").parquet(path + "/lists")
-        finally:
-            res_df.unpersist()
+        ))
+        books = pq_codebooks(
+            res_df, id_col="match_id", vec_col="__res", m=m, codes=codes,
+            seed=seed, arrow=arrow, normalize=False,
+        )
+        enc = encode(
+            res_df, books, vec_col="__res", normalize=False
+        ).drop("__res")
+        enc.select("match_id", "vec", "pq_code", "cent_id").write.mode(
+            "overwrite"
+        ).partitionBy("cent_id").parquet(path + "/lists")
     else:
         books = pq_codebooks(
             corpus, id_col=id_col, vec_col=vec_col, m=m, codes=codes,

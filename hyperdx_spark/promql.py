@@ -85,6 +85,7 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hyperdx_spark.session import local_checkpoint, scoped
 from hyperdx_spark.sqlident import sql_ident
 
 DEFAULT_LOOKBACK_S = 300  # Prometheus staleness window
@@ -2495,9 +2496,10 @@ class PromQLEngine:
                 # does not fire across the two branches (column pruning
                 # specializes their copies), and the aggregated vector is
                 # small by construction (<= steps x series rows) — so one
-                # localCheckpoint turns two full scans of the raw samples
-                # into one (blocks are GC-reclaimed, no cache-entry leak)
-                fine = fine.localCheckpoint(eager=True)
+                # local checkpoint turns two full scans of the raw samples
+                # into one. The checkpoint is a persistent RDD until the
+                # query's scope frees it (query_range is scoped)
+                fine = local_checkpoint(fine, eager=True)
                 reagg = self._REAGG.get(l.op, F.sum)  # count -> sum of counts
                 coarse = fine.groupBy("__step", *coarse_by).agg(
                     reagg("value").alias("value")
@@ -2717,6 +2719,7 @@ class PromQLEngine:
             return []
         return [r["val"] for r in df.orderBy("val").collect()]
 
+    @scoped
     def query_range(
         self,
         spark: SparkSession,

@@ -29,12 +29,26 @@ local[32]):
   ``GeneratedIterator`` without saying which codegen stage it is. A session
   the engine receives keeps its own cache size and gets only the class-name
   conf.
+* Resource lifetime: a query's persisted frames, local checkpoints,
+  broadcasts, temp directories and per-call tables are made through
+  :func:`scoped`, which frees them on a raise (also when :func:`overlapped`
+  cancels the work) and otherwise when the query's returned frame is
+  garbage, or earlier through :func:`release`. A session that serves
+  dashboards for days keeps no block, cache entry, table or directory of a
+  query it has answered.
 """
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+import functools
 import os
+import shutil
+import tempfile
+import threading
 import uuid
+import weakref
 from itertools import islice
 
 from pyspark import inheritable_thread_target
@@ -150,7 +164,9 @@ def overlapped(thunks, ahead=None):
     thunk, or when the consumer closes the iterator early, the call cancels
     its tag's jobs and waits for its threads before it raises or returns:
     no work outlives the call. Thunks must not share mutable session state
-    such as temp view names.
+    such as temp view names. Each thunk runs in a copy of the caller's
+    ``contextvars`` context, so what it creates lands in the caller's
+    :func:`scoped` scope.
     """
     from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 
@@ -162,13 +178,14 @@ def overlapped(thunks, ahead=None):
         ahead = max(1, len(thunks))
     thunks = iter(thunks)
     pool = ThreadPoolExecutor(max_workers=ahead)
+    ctx = contextvars.copy_context()
 
     def submit(fn):
         def run():
             sc.addJobTag(tag)
             return fn()
 
-        return pool.submit(inheritable_thread_target(session)(run))
+        return pool.submit(ctx.copy().run, inheritable_thread_target(session)(run))
 
     def results():
         pending = []
@@ -227,3 +244,157 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     arr = pa.array(data, type=pa.struct(list(to_arrow_schema(schema))))
     table = pa.Table.from_batches([pa.RecordBatch.from_struct_array(arr)])
     return spark.createDataFrame(table, schema)
+
+
+# The scope that owns what the running query creates (see :func:`scoped`).
+_SCOPE: contextvars.ContextVar = contextvars.ContextVar("hdx_scope", default=None)
+
+
+class _Release:
+    """A release that runs at most once and outlives a gone session."""
+
+    def __init__(self, free):
+        self.free = free
+
+    def __call__(self):
+        with contextlib.suppress(Exception):
+            self.__dict__.pop("free", lambda: None)()
+
+
+class _Scope:
+    def __init__(self):
+        self.frees: list = []
+        self.result = None
+
+    def add(self, free) -> _Release:
+        self.frees.append(_Release(free))
+        return self.frees[-1]
+
+    def release(self) -> None:
+        frees, self.frees = self.frees, []
+        for free in reversed(frees):
+            free()
+
+    def __enter__(self):
+        self.parent = _SCOPE.get()
+        self._token = _SCOPE.set(self)
+        return self
+
+    def __exit__(self, exc_type, exc, tb):
+        _SCOPE.reset(self._token)
+        result, self.result = self.result, None
+        if exc_type is not None or not isinstance(result, DataFrame):
+            self.release()
+        elif self.parent is not None:
+            self.parent.frees.extend(self.frees)
+        elif self.frees:
+            result._hdx_release = weakref.finalize(result, self.release)
+            result._hdx_release.atexit = False
+
+
+def scoped(fn=None):
+    """Own every resource a query creates: ``@scoped`` on a function, or
+    ``with scoped():``. :func:`persist`, :func:`local_checkpoint`,
+    :func:`broadcast`, :func:`tempdir` and :func:`scratch_table` add what
+    they make to the innermost scope. It frees them at once when its body
+    raises (also when :func:`overlapped` cancels it) or ends without a
+    DataFrame result. A DataFrame result hands them to the enclosing
+    scope; an outermost one keeps them until it is garbage or passed to
+    :func:`release`. Frames derived from a released result still run
+    unless they read a local checkpoint, which cannot be recomputed. A
+    function returns the frame that reads its resources, not a container
+    of it."""
+    if fn is None:
+        return _Scope()
+
+    @functools.wraps(fn)
+    def run(*args, **kwargs):
+        with _Scope() as scope:
+            out = scope.result = fn(*args, **kwargs)
+        return out
+
+    return run
+
+
+def release(df: DataFrame) -> None:
+    """Free now what an outermost :func:`scoped` result holds, or one frame
+    made by :func:`persist` or :func:`local_checkpoint` (an early release
+    in a loop). A no-op on any other frame."""
+    vars(df).get("_hdx_release", lambda: None)()
+
+
+def _scope() -> _Scope:
+    scope = _SCOPE.get()
+    if scope is None:
+        raise RuntimeError("query resources are made under session.scoped")
+    return scope
+
+
+# Holders of each persisted plan, by its semantic hash. Spark keeps one
+# cache entry per plan, so calls that persist the same plan (overlapped
+# k-means fits over one corpus) share it. Only the last holder's release
+# frees it: an earlier one would free it under a job the other holder has
+# planned, and that job rebuilds it outside the cache manager, where
+# nothing frees it.
+_PERSISTED: dict = {}
+_PERSISTED_LOCK = threading.Lock()
+
+
+def persist(df: DataFrame, storage_level=None) -> DataFrame:
+    """``df.persist`` (Spark's default level when None), owned by the scope."""
+    scope = _scope()
+    key = df._jdf.queryExecution().normalized().semanticHash()
+    with _PERSISTED_LOCK:
+        _PERSISTED[key] = _PERSISTED.get(key, 0) + 1
+        df = df.persist() if storage_level is None else df.persist(storage_level)
+
+    def free():
+        with _PERSISTED_LOCK:
+            _PERSISTED[key] -= 1
+            if not _PERSISTED[key]:
+                del _PERSISTED[key]
+                df.unpersist()
+
+    df._hdx_release = scope.add(free)
+    return df
+
+
+def local_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint``, owned by the scope. ``unpersist()`` does not
+    free checkpoint blocks, so the release unpersists the checkpoint's own
+    RDD, registered before any job materializes it."""
+    scope = _scope()
+    df = df.localCheckpoint(eager=False)
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    df._hdx_release = scope.add(lambda: rdd.unpersist(False))
+    if eager:
+        df.count()
+    return df
+
+
+def broadcast(spark: SparkSession, value):
+    """``sparkContext.broadcast``, unpersisted with the scope (a frame
+    derived from a released result ships it again)."""
+    scope = _scope()
+    bc = spark.sparkContext.broadcast(value)
+    scope.add(bc.unpersist)
+    return bc
+
+
+def tempdir(prefix: str) -> str:
+    """A new directory under ``tempfile.gettempdir()``, removed with the
+    scope."""
+    scope = _scope()
+    path = tempfile.mkdtemp(prefix=prefix)
+    scope.add(functools.partial(shutil.rmtree, path, ignore_errors=True))
+    return path
+
+
+def scratch_table(spark: SparkSession, prefix: str) -> str:
+    """A managed-table name no other call uses, dropped with the scope.
+    A process killed before the drop leaves the table's directory in the
+    warehouse; no later call reuses its name."""
+    scope = _scope()
+    name = f"{prefix}_{uuid.uuid4().hex}"
+    scope.add(lambda: spark.sql(f"DROP TABLE IF EXISTS {name}"))
+    return name

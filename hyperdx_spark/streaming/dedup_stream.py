@@ -32,6 +32,7 @@ from hyperdx_spark.pipeline.incremental import (
     compact_exact_store,
     dedup_exact_against_store,
 )
+from hyperdx_spark.session import local_checkpoint, scoped
 
 
 def start_incremental_dedup(
@@ -55,33 +56,24 @@ def start_incremental_dedup(
     ``compact_exact_store`` (crash-safe rename-aside swap) — sequential
     with the epoch, so no reader ever races the rewrite."""
 
+    @scoped
     def _epoch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        classified = dedup_exact_against_store(
+        # one pass feeds BOTH the sink and the append; the scope frees the
+        # blocks at epoch end, so a long-running stream keeps none of them
+        classified = local_checkpoint(dedup_exact_against_store(
             batch_df, spark, table, text_col=text_col, id_col=id_col
-        ).localCheckpoint(eager=False)
-        # lazy checkpoint: one pass feeds BOTH the sink and the append,
-        # and the handle below exists before the sink write materializes
-        # the blocks — so even a failed materialization is releasable
-        # free each epoch's checkpoint blocks at epoch end (or on a failed
-        # sink/append) — a long-running stream would otherwise accumulate
-        # per-batch blocks until JVM GC gets around to them
-        from hyperdx_spark.pipeline.dedup import _LocalCheckpointHandle
-
-        handle = _LocalCheckpointHandle(classified)
-        try:
-            (
-                classified.withColumn("__epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__epoch")
-                .parquet(out_path)
-            )
-            append_novel_to_store(classified, table, id_col=id_col)
-        finally:
-            handle.unpersist()
+        ))
+        (
+            classified.withColumn("__epoch", F.lit(int(epoch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__epoch")
+            .parquet(out_path)
+        )
+        append_novel_to_store(classified, table, id_col=id_col)
         if compact_every and (int(epoch_id) + 1) % compact_every == 0:
             compact_exact_store(spark, table)
 

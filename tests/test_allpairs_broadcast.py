@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hyperdx_spark.pipeline import dedup, similarity
+from hyperdx_spark.session import release
 
 
 def _legacy_pairs(df, *, id_col="vec_id", vec_col="embedding", threshold=0.5):
@@ -62,7 +63,7 @@ def _assert_match(spark, rows, threshold=0.5, id_type="long"):
     fast = similarity._allpairs_broadcast(df, "vec_id", "embedding", threshold)
     assert fast is not None
     got = _collect_pairs(fast)
-    dedup.release_cached(fast)
+    release(fast)
     want = _collect_pairs(_legacy_pairs(df, threshold=threshold))
     assert got == want, {
         "extra": {k: v for k, v in got.items() if k not in want},
@@ -120,7 +121,7 @@ def test_duplicate_ids_decline_to_legacy(spark):
     assert similarity._allpairs_broadcast(df, "vec_id", "embedding", -2.0) is None
     out = similarity.cosine_pairs(df, threshold=-2.0, exhaustive=True)
     got = _collect_pairs(out)
-    dedup.release_cached(out)
+    release(out)
     assert got == _collect_pairs(_legacy_pairs(df, threshold=-2.0))
 
 
@@ -156,7 +157,7 @@ def test_empty_input(spark):
     fast = similarity._allpairs_broadcast(df, "vec_id", "embedding", 0.5)
     assert fast is not None
     assert fast.count() == 0
-    dedup.release_cached(fast)
+    release(fast)
 
 
 def test_caps_fall_back_to_none(spark, monkeypatch):
@@ -169,7 +170,7 @@ def test_caps_fall_back_to_none(spark, monkeypatch):
     # and cosine_pairs still answers through the legacy plan
     out = similarity.cosine_pairs(df, threshold=0.5, exhaustive=True)
     assert out.count() == 10  # all 5*4/2 identical-direction pairs
-    dedup.release_cached(out)
+    release(out)
 
 
 def test_unsupported_id_type_falls_back(spark):
@@ -179,7 +180,7 @@ def test_unsupported_id_type_falls_back(spark):
     assert similarity._allpairs_broadcast(df, "vec_id", "embedding", 0.5) is None
     out = similarity.cosine_pairs(df, threshold=0.5, exhaustive=True)
     assert out.count() == 1
-    dedup.release_cached(out)
+    release(out)
 
 
 def test_cosine_pairs_exhaustive_routes_through_broadcast(spark):
@@ -193,6 +194,6 @@ def test_cosine_pairs_exhaustive_routes_through_broadcast(spark):
     # the legacy pair enumeration is gone: no nested-loop join feeding it
     assert "BroadcastNestedLoopJoin" not in plan
     got = _collect_pairs(out)
-    dedup.release_cached(out)
+    release(out)
     want = _collect_pairs(_legacy_pairs(df, threshold=0.9))
     assert got == want

@@ -13,14 +13,17 @@ import warnings
 import pytest
 
 from hyperdx_spark.pipeline import dedup
+from hyperdx_spark.session import release
 
 
 def both_paths(monkeypatch, pairs, **kw):
+    persistent = pairs.sparkSession.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
     local = dedup.dedup_groups(pairs, **kw)
-    assert not hasattr(local, "_hyperdx_cached")  # nothing persisted
+    assert persistent().size() == before  # nothing persisted
     monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", -1)
     dist = dedup.dedup_groups(pairs, **kw)
-    assert hasattr(dist, "_hyperdx_cached")  # the distributed loop ran
+    assert persistent().size() > before  # the distributed loop ran
     monkeypatch.undo()
     try:
         assert local.schema == dist.schema
@@ -28,7 +31,8 @@ def both_paths(monkeypatch, pairs, **kw):
             map(tuple, dist.collect())
         )
     finally:
-        dedup.release_cached(dist)
+        release(dist)
+        assert persistent().size() == before
 
 
 def test_local_cc_parity_components(spark, monkeypatch):

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from hyperdx_spark.pipeline import clustering, similarity
 from hyperdx_spark.pipeline.sampling import sample_key
+from hyperdx_spark.session import release
 
 
 def _three_blob_df(spark):
@@ -367,7 +368,7 @@ def test_d4_select_end_to_end(spark):
     # dedup-dominant: blobs are tight, everything within a blob pairs
     sem = dedup.d4_select(corpus, emb, block_k=3, threshold=0.9)
     assert sorted(r["doc_id"] for r in sem.collect()) == [0, 8, 16]
-    dedup.release_cached(sem)
+    release(sem)
     # diversify-dominant: threshold 1.1 -> no pairs; D4 drops 2 per blob
     div = dedup.d4_select(corpus, emb, block_k=3, threshold=1.1)
     kept = sorted(r["doc_id"] for r in div.collect())
@@ -379,7 +380,7 @@ def test_d4_select_end_to_end(spark):
         for r in clustering.drop_prototypical(emb, cents, 0.25).collect()
     )
     assert kept == want
-    dedup.release_cached(div)
+    release(div)
 
 
 def test_null_block_value_raises(spark):
@@ -456,8 +457,8 @@ def test_d4_select_precomputed_centroids(spark):
     got_pre = sorted(r["doc_id"] for r in pre.collect())
     got_fit = sorted(r["doc_id"] for r in fit.collect())
     assert got_pre == got_fit == [0, 8, 16]
-    dedup.release_cached(pre)
-    dedup.release_cached(fit)
+    release(pre)
+    release(fit)
     with pytest.raises(ValueError, match="block_centroids"):
         dedup.d4_select(
             corpus, emb, block_k=2, threshold=0.9, block_centroids=cents

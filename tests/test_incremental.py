@@ -239,7 +239,7 @@ def test_minhash_probe_matches_full_recompute(spark):
     surface EXACTLY the (batch, history) collision pairs a full
     minhash_lsh_pairs recompute over history+batch finds (same bands, no
     caps, no thresholds) — the incremental loop loses nothing."""
-    from hyperdx_spark.pipeline.dedup import minhash_lsh_pairs, release_cached
+    from hyperdx_spark.pipeline.dedup import minhash_lsh_pairs
 
     rows = _corpus_rows(80)
     hist, batch = rows[:60], rows[60:]

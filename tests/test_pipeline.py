@@ -965,51 +965,69 @@ def test_exact_substring_window_dedup_vs_reference(spark):
     assert got[4][0] == rows[3][1]           # byte-exact rebuild
 
 
+def _persistent_levels(spark):
+    """(useDisk, useMemory) of every persistent RDD the session holds."""
+    from collections import Counter
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return Counter(
+        (r.getStorageLevel().useDisk(), r.getStorageLevel().useMemory())
+        for r in rdds.values()
+    )
+
+
+def _cached_frames(spark):
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().length()
+
+
 def test_span_dedup_storage_control(spark):
     """VERDICT r4 #7 / ADVICE r4: the operator-internal persists accept a
     StorageLevel (DISK_ONLY keeps the exploded sentence table off the heap
-    at corpus scale) and release_cached frees them after the action; the
-    result stays usable afterwards (lineage recompute)."""
+    at corpus scale) and releasing the result frees them; the session's
+    persistent RDDs and cache manager show both."""
     from pyspark import StorageLevel
 
     from hyperdx_spark.pipeline import dedup
+    from hyperdx_spark.session import release
 
     rows = [
         (1, "Alpha one. Beta two! Gamma three? Delta four. Epsilon five."),
         (2, "Start here. Beta two! Gamma three? Delta four. End here."),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    levels, frames = _persistent_levels(spark), _cached_frames(spark)
     out = dedup.duplicate_span_removal(df, storage_level=StorageLevel.DISK_ONLY)
     got = {r["doc_id"]: r for r in out.collect()}
     assert got[2]["n_dropped"] == 3
-    cached = out._hyperdx_cached
-    assert len(cached) == 2
-    for c in cached:
-        assert c.storageLevel.useDisk and not c.storageLevel.useMemory
-    dedup.release_cached(out)
-    for c in cached:
-        assert not c.storageLevel.useDisk and not c.storageLevel.useMemory
+    # the sentence and span tables, on disk only
+    assert _persistent_levels(spark) - levels == {(True, False): 2}
+    assert _cached_frames(spark) == frames + 2
+    release(out)
+    assert _persistent_levels(spark) == levels
+    assert _cached_frames(spark) == frames
     # further actions recompute from lineage, result unchanged
     assert out.count() == 2
-    # release_cached is a no-op on frames without registered intermediates
-    dedup.release_cached(df)
+    # release is a no-op on a frame that holds nothing
+    release(df)
+    assert _persistent_levels(spark) == levels
     # the other persisting operators accept the parameter too
     pairs = dedup.minhash_lsh_pairs(
         df, storage_level=StorageLevel.DISK_ONLY
     )
     pairs.collect()
-    assert all(c.storageLevel.useDisk for c in pairs._hyperdx_cached)
-    dedup.release_cached(pairs)
+    assert _persistent_levels(spark) - levels == {(True, False): 1}
+    del pairs
+    assert _persistent_levels(spark) == levels
 
 
 def test_composed_release_frees_inner_blocks(spark, monkeypatch):
     """ADVICE r5 (medium): the composed public APIs — drop_near_duplicates /
-    semantic_dedup — must re-register the blocks their inner operators
-    persisted (LSH signature frame, CC edge list / labels), so ONE
-    release_cached on the composed result frees everything, including the
-    label-propagation localCheckpoint blocks DataFrame.unpersist() cannot
-    reach."""
+    semantic_dedup — own the blocks their inner operators persisted (LSH
+    signature frame, CC edge list / labels), so ONE release of the composed
+    result frees everything, including the label-propagation local
+    checkpoints that DataFrame.unpersist() cannot reach."""
     from hyperdx_spark.pipeline import dedup
+    from hyperdx_spark.session import release
 
     # the contract under test is the DISTRIBUTED loop's persisted blocks;
     # force past the r17 driver-local CC path (which persists nothing)
@@ -1017,8 +1035,8 @@ def test_composed_release_frees_inner_blocks(spark, monkeypatch):
 
     sc = spark.sparkContext
 
-    def n_blocks():
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    def held():
+        return sc._jsc.getPersistentRDDs().size(), _cached_frames(spark)
 
     # ---- chain graph: diameter 15 forces >5 propagation rounds, so the
     # loop takes its it%5 localCheckpoint branch at least twice
@@ -1028,17 +1046,16 @@ def test_composed_release_frees_inner_blocks(spark, monkeypatch):
     corpus = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(20)], "doc_id long, text string"
     )
-    before = n_blocks()
+    rdds, frames = held()
     out = dedup.drop_near_duplicates(corpus, pairs)
     kept = out.count()
     assert kept == 20 - 16  # one keeper (id 0) of the 17-node chain
-    assert len(out._hyperdx_cached) >= 3  # edges, labels, >=1 cp handle
-    assert any(
-        isinstance(c, dedup._LocalCheckpointHandle) for c in out._hyperdx_cached
-    )
-    assert n_blocks() > before
-    dedup.release_cached(out)
-    assert n_blocks() == before
+    n_rdds, n_frames = held()
+    assert n_rdds - rdds >= 3  # edges, labels, >=1 checkpoint
+    # persistent RDDs outside the cache manager are the checkpoints
+    assert (n_rdds - rdds) - (n_frames - frames) >= 1
+    release(out)
+    assert held() == (rdds, frames)
 
     # ---- semantic_dedup end to end: the cosine_pairs signature persist
     # must ride through to the composed result too
@@ -1046,44 +1063,47 @@ def test_composed_release_frees_inner_blocks(spark, monkeypatch):
         [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(4)],
         "vec_id long, embedding array<double>",
     )
-    before = n_blocks()
     sem = dedup.semantic_dedup(
         corpus.limit(6), emb, threshold=0.9, num_planes=8, bands=2, dim=4
     )
     assert sem.count() == 3  # ids 1-3 are exact duplicates of id 0
-    assert len(sem._hyperdx_cached) >= 3  # sig_rows + edges + labels
-    dedup.release_cached(sem)
-    assert n_blocks() == before
+    assert held()[0] - rdds >= 3  # sig_rows + edges + labels
+    release(sem)
+    assert held() == (rdds, frames)
 
 
 def test_dedup_groups_unpersists_on_midloop_failure(spark, monkeypatch):
     """The CC loop runs convergence-count jobs while edges/labels are
     persisted; a mid-loop failure must release every block it materialized
-    (same unpersist-on-raise discipline as semantic_dedup — r15 advice),
-    not strand them in a long-lived session."""
+    (the scope frees them on the raise), not strand them in a long-lived
+    session."""
     import pytest as _pytest
 
     from hyperdx_spark.pipeline import dedup
 
     sc = spark.sparkContext
 
-    def n_blocks():
-        return len(sc._jsc.sc().getRDDStorageInfo())
+    def held():
+        return (
+            len(sc._jsc.sc().getRDDStorageInfo()),
+            sc._jsc.getPersistentRDDs().size(),
+            _cached_frames(spark),
+        )
 
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "id_a long, id_b long"
     )
-    # r17: force the DISTRIBUTED loop — the unpersist-on-raise discipline
-    # under test only exists there (the small-graph local path persists
-    # nothing). Cap 0 makes _dedup_groups_local's bounded probe (collect
-    # call #1) decline.
+    # r17: force the DISTRIBUTED loop — the release-on-raise under test
+    # only matters there (the small-graph local path persists nothing).
+    # Cap 0 makes _dedup_groups_local's bounded probe (collect call #1)
+    # decline.
     monkeypatch.setattr(dedup, "_LOCAL_CC_MAX_EDGES", 0)
     # patch the CONCRETE class: pyspark.sql.DataFrame is the abstract
     # dispatch base in Spark 4 and the classic subclass overrides collect.
     # r16: numeric-id convergence probes are one agg + collect per round
     # (the label-sum check), so the injected failure rides collect now.
     df_cls = type(pairs)
-    before = n_blocks()
+    before = held()
     real_collect = df_cls.collect
     calls = {"n": 0}
 
@@ -1101,7 +1121,7 @@ def test_dedup_groups_unpersists_on_midloop_failure(spark, monkeypatch):
         dedup.dedup_groups(pairs)
     monkeypatch.undo()
     assert calls["n"] == 3  # the failure really came from inside the loop
-    assert n_blocks() == before
+    assert held() == before
 
 
 def test_scale_safety_caps_default_on():

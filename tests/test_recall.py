@@ -49,6 +49,7 @@ def test_minhash_banding_recall_tracks_broder_prediction(spark):
     xxhash64 min-wise family, not sampling luck (everything is seeded —
     the measurement is deterministic)."""
     from hyperdx_spark.pipeline import dedup
+    from hyperdx_spark.session import release
 
     corpus, planted = bench_dedup_recall.plant_text_pairs(
         spark, n_base=400, tiers=(0.9,), per_tier=150
@@ -59,7 +60,7 @@ def test_minhash_banding_recall_tracks_broder_prediction(spark):
     tier = planted[0.9]
     exp = spark.createDataFrame(tier["pairs"], "id_a long, id_b long")
     found = pairs.join(exp, on=["id_a", "id_b"], how="left_semi").count()
-    dedup.release_cached(pairs)
+    release(pairs)
     measured = found / len(tier["pairs"])
     predicted = 1.0 - (1.0 - tier["j"] ** 4) ** 8  # r=4, b=8
     assert measured >= predicted - 0.05, (

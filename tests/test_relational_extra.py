@@ -706,6 +706,7 @@ def test_cosine_pairs_mega_bucket_cap(spark):
     import numpy as np
 
     from hyperdx_spark.pipeline import dedup, similarity
+    from hyperdx_spark.session import release
 
     rng = np.random.default_rng(3)
     rows = []
@@ -725,13 +726,13 @@ def test_cosine_pairs_mega_bucket_cap(spark):
     got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
     assert (100, 101) in got
     assert not any(a < 100 and b < 100 for a, b in got)  # mega bucket dropped
-    dedup.release_cached(capped)
+    release(capped)
     uncapped = similarity.cosine_pairs(
         df, threshold=0.9, num_planes=16, bands=2, dim=8, max_bucket_size=None
     )
     n = uncapped.count()
     assert n >= 40 * 39 // 2  # the fan-out the cap exists to prevent
-    dedup.release_cached(uncapped)
+    release(uncapped)
 
 
 def test_cosine_pairs_recall_guard(spark):

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from hyperdx_spark.pipeline import dedup
 from hyperdx_spark.pipeline.dedup import TOKEN_SPLIT, sql_ident
+from hyperdx_spark.session import release
 
 
 def _shingle_rows_twin(df, text_col="text", id_col="doc_id", n=3):
@@ -153,7 +154,7 @@ def test_jaccard_pairs_match_sizes_join_twin(spark, edge_docs, max_df):
     o = sorted(map(tuple, old.collect()))
     m = sorted(map(tuple, new.collect()))
     assert o == m and len(m) > 0   # incl. exact jaccard doubles
-    dedup.release_cached(new)
+    release(new)
 
 
 def test_jaccard_dup_text_pair_is_exact_one(spark, edge_docs):
@@ -162,7 +163,7 @@ def test_jaccard_dup_text_pair_is_exact_one(spark, edge_docs):
     # duplicate-text docs (3, 8) and the empty docs (5, 6, 7 — all one ''
     # shingle) are the exact-1.0 pairs, matching the three-branch twin
     assert rows == [(3, 8, 1.0), (5, 6, 1.0), (5, 7, 1.0), (6, 7, 1.0)]
-    dedup.release_cached(new)
+    release(new)
 
 
 def _winnow_pairs_twin(df, *, k=8, w=16, threshold=0.3, max_fp_df=1000):
@@ -228,18 +229,18 @@ def test_winnow_pairs_match_sizes_join_twin(spark, winnow_docs, max_fp_df):
     o = sorted(map(tuple, old.collect()))
     m = sorted(map(tuple, new.collect()))
     assert o == m and len(m) > 0  # incl. exact overlap doubles
-    dedup.release_cached(new)
+    release(new)
 
 
 def test_winnow_plan_has_no_pair_side_join(spark, winnow_docs):
     new = dedup.winnow_pairs(winnow_docs, threshold=0.05)
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
-    dedup.release_cached(new)
+    release(new)
 
 
 def test_jaccard_plan_has_no_pair_side_join(spark, edge_docs):
     new = dedup.ngram_jaccard_pairs(edge_docs, n=3, threshold=0.5)
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan  # sizes ride the postings; no join remains
-    dedup.release_cached(new)
+    release(new)

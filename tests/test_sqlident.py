@@ -30,6 +30,7 @@ def test_dedup_groups_converges_in_one_round_on_fixed_point(spark):
     (self-loop pairs) at iteration 1 — no spurious did-not-converge warning
     when max_iterations == 1."""
     from hyperdx_spark.pipeline import dedup
+    from hyperdx_spark.session import release
 
     pairs = spark.createDataFrame(
         [(1, 1), (5, 5)], "id_a long, id_b long"
@@ -40,7 +41,7 @@ def test_dedup_groups_converges_in_one_round_on_fixed_point(spark):
         warnings.simplefilter("error", RuntimeWarning)
         out = dedup.dedup_groups(pairs, max_iterations=1)
         rows = {r["id"]: (r["group_id"], r["is_keeper"]) for r in out.collect()}
-    dedup.release_cached(out)
+    release(out)
     assert rows == {1: (1, True), 5: (5, True)}
 
 

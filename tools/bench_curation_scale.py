@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
-from hyperdx_spark.session import RUNTIME_CONFS, tune_session  # noqa: E402
+from hyperdx_spark.session import RUNTIME_CONFS, release, tune_session  # noqa: E402
 from hyperdx_spark.io import ensure_min_parallelism, load_table  # noqa: E402
 from hyperdx_spark.pipeline import (  # noqa: E402
     clustering, dedup, dsir, packing, perplexity, similarity, text, textnorm,
@@ -149,9 +149,10 @@ def run_chain(spark, sf_dir: str) -> dict:
         sem.select(F.col("doc_id").alias("vec_id")), on="vec_id",
         how="left_semi",
     )
-    kept_vec = clustering.drop_prototypical(semi2, cents, 0.25).select(
-        F.col("vec_id").alias("doc_id")
-    )
+    # hold the operator's result while frames derived from it run: it
+    # owns the centroid broadcast they read
+    kept_d4 = clustering.drop_prototypical(semi2, cents, 0.25)
+    kept_vec = kept_d4.select(F.col("vec_id").alias("doc_id"))
     dropped = semi2.select(F.col("vec_id").alias("doc_id")).join(
         kept_vec, on="doc_id", how="left_anti"
     )
@@ -250,8 +251,8 @@ def measure_d4_shared(spark, sf_dir: str) -> dict:
     # mismatch raise): the sf1 call's persisted assignment frames would
     # otherwise stay cached through the sf10 run and bias exactly the
     # timings this function reports (r16 review)
-    dedup.release_cached(sel)
-    dedup.release_cached(sem)
+    release(sel)
+    release(sem)
     sem.unpersist()
     if out["naive_rows"] != out["d4_select_rows"]:
         raise AssertionError(

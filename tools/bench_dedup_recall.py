@@ -47,6 +47,7 @@ from hyperdx_spark import get_spark  # noqa: E402
 from hyperdx_spark.io import ensure_min_parallelism, load_table  # noqa: E402
 from hyperdx_spark.pipeline import clustering, similarity  # noqa: E402
 from hyperdx_spark.pipeline.sampling import sample_key  # noqa: E402
+from hyperdx_spark.session import release  # noqa: E402
 
 DIRS = sys.argv[1:] or ["/root/repo/.scale/sf1", "/root/repo/.scale/sf10"]
 TIERS = (0.75, 0.85, 0.95)
@@ -200,7 +201,7 @@ def measure_minhash_recall(spark, *, n_base: int = 2000) -> dict:
                     1.0 - (1.0 - tier["j"] ** r) ** b, 4
                 ),
             }
-        dedup.release_cached(pairs)
+        release(pairs)
         out[f"{nh}x{b}"] = {"tiers": tiers,
                             "wall_s": round(time.monotonic() - t0, 2)}
     corpus.unpersist()
@@ -352,8 +353,8 @@ def measure_winnow_recall(
                 f"but only {found}/{len(pp)} planted pairs produced a "
                 "shared fingerprint"
             )
-    pairs_df.unpersist()  # our own persist; release_cached frees only
-    dedup.release_cached(pairs_df)  # ...winnow_pairs' fingerprint frame
+    pairs_df.unpersist()  # our own persist; release frees only
+    release(pairs_df)  # ...winnow_pairs' fingerprint frame
     corpus.unpersist()
     return {"tiers": tiers, "k": k, "w": w, "guarantee_len": guarantee,
             "wall_s": round(time.monotonic() - t0, 2)}
@@ -394,9 +395,12 @@ def main() -> None:
         cents = clustering.kmeans_fit(
             aug, k, iterations=3, init="parallel"
         )
-        assigned = clustering.kmeans_assign(
+        # hold the operator's result while frames derived from it run:
+        # it owns the centroid broadcast they read
+        assigned_full = clustering.kmeans_assign(
             aug, cents, method="arrow", cluster_col="cluster"
-        ).select("vec_id", "cluster").persist()
+        )
+        assigned = assigned_full.select("vec_id", "cluster").persist()
         assigned.count()
         fit_s = round(time.monotonic() - t0, 2)
         # blocked recall == same-cluster fraction: within a cluster the

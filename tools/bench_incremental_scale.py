@@ -27,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from hyperdx_spark.pipeline import dedup, incremental as inc  # noqa: E402
-from hyperdx_spark.session import get_spark  # noqa: E402
+from hyperdx_spark.session import get_spark, release  # noqa: E402
 
 
 def main() -> None:
@@ -83,7 +83,7 @@ def main() -> None:
     def full_recompute():
         pairs = dedup.minhash_lsh_pairs(docs, verify_threshold=0.5)
         rows = pairs.collect()
-        dedup.release_cached(pairs)
+        release(pairs)
         return rows
 
     t0 = time.time()

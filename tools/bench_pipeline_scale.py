@@ -27,6 +27,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from hyperdx_spark import get_spark  # noqa: E402
 from hyperdx_spark.io import load_table  # noqa: E402
 from hyperdx_spark.pipeline import dedup, similarity  # noqa: E402
+from hyperdx_spark.session import release  # noqa: E402
 
 
 def _docs_with_near_dups(spark, sf_dir):
@@ -59,7 +60,7 @@ def main() -> None:
             docs_nd, num_hashes=32, bands=8, verify_threshold=0.5
         )
         n = pairs.count()
-        dedup.release_cached(pairs)
+        release(pairs)
         return f"{n} pairs"
 
     clock("minhash_lsh", run_minhash)
@@ -78,7 +79,7 @@ def main() -> None:
             threshold=0.3,
         )
         n = pairs.count()
-        dedup.release_cached(pairs)
+        release(pairs)
         return f"{n} pairs"
 
     clock("winnow", run_winnow)
@@ -89,7 +90,7 @@ def main() -> None:
         )
         out = dedup.duplicate_span_removal(span_docs)
         dropped = out.agg(F.sum("n_dropped")).collect()[0][0]
-        dedup.release_cached(out)
+        release(out)
         return f"{dropped} sentences dropped"
 
     clock("span_dedup", run_span)
@@ -109,7 +110,7 @@ def main() -> None:
             min_expected_recall=None,
         )
         ret = f"{kept.count()} docs kept"
-        dedup.release_cached(kept)
+        release(kept)
         return ret
 
     clock("semantic_dedup", run_semdedup)
